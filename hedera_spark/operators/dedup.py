@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hedera_spark.plans.broadcast import broadcast_if_fits, plan_bytes
 from hedera_spark.sources.tables import load_table
 
 N_MINHASH = 16
@@ -132,6 +133,9 @@ HOT_SET_ARRAY_ROUTE_MAX = 1024
 # array route's worst case is bounded by the input itself, and the
 # probe's extra job would cost more than it can save (see _pair_stats).
 HOT_ROUTE_PROBE_MIN_BYTES = 2 * 1024 * 1024
+# Ceiling on the planner's size estimate of the cold (df <= cap)
+# vocabulary for the cold route's broadcast join (plans/broadcast.py).
+COLD_VOCAB_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -207,8 +211,7 @@ def _pair_stats(arrs: DataFrame, df_cap: int = NGRAM_DF_CAP) -> DataFrame:
     # input size, while the probe's extra job+codegen measurably taxed
     # the bench query (interleaved A/B: 1.22x at sf0.1 against a 1.03x
     # same-code control), so small corpora take route A unconditionally.
-    est_bytes = int(str(arrs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    probe = est_bytes >= HOT_ROUTE_PROBE_MIN_BYTES
+    probe = plan_bytes(arrs) >= HOT_ROUTE_PROBE_MIN_BYTES
     dfreq = (
         arrs.select(F.explode("shingles").alias("shingle"))
         .groupBy("shingle")
@@ -242,11 +245,14 @@ def _pair_stats(arrs: DataFrame, df_cap: int = NGRAM_DF_CAP) -> DataFrame:
             )
         ).persist()
     else:
+        # the cold vocabulary is the Zipf tail, which grows with the
+        # corpus: broadcast it only while it fits, else let the planner
+        # shuffle-join on shingle
         cold = dfreq.where(F.col("df") <= df_cap).select("shingle")
         w_doc = Window.partitionBy("doc_id")
         kept = (
             arrs.select("doc_id", F.explode("shingles").alias("shingle"))
-            .join(F.broadcast(cold), "shingle")
+            .join(broadcast_if_fits(cold, COLD_VOCAB_BROADCAST_MAX_BYTES), "shingle")
             .select(
                 "doc_id",
                 F.count(F.lit(1)).over(w_doc).cast("long").alias("n"),

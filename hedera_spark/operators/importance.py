@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hedera_spark.functions.literals import double_array
 from hedera_spark.sources.tables import load_table, table_state_key
 
 DSIR_BUCKETS = 512
@@ -198,7 +199,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     def score(w: list) -> "DataFrame":
         """Map-side z per doc: bucket-sorted fold of x * w[bucket] plus
         the bias (w[-1]); w inlined as a literal array."""
-        w_arr = F.array(*[F.lit(float(v)) for v in w[:-1]])
+        w_arr = double_array(w[:-1])
         parts = F.sort_array(
             F.collect_list(F.struct(F.col("bucket"), F.col("x")))
         )

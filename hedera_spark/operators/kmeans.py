@@ -24,11 +24,25 @@ discipline of stream_drift's fences; a bounded driver pull of K=8 rows
 per step, nothing corpus-sized), so assignment is a pure map — per-row
 fold over the centroid array, argmin via struct-ordered array_min, NO
 shuffle and NO row amplification — followed by one partial-agg shuffle
-keyed on (cluster, dim) for the means (bounded by K·dims, not corpus
-size). Each iteration is ONE job; the returned assignment plan is
-map-only. (The previous broadcast-crossJoin formulation shuffled every
-vector's 64-double array ×K through a groupBy argmin: measured 5.2 s →
-1.6 s at sf0.1 for the training loop.)
+keyed on the cluster alone, one `round(avg(emb[i]), 6)` per coordinate
+(bounded by K per partition, not corpus size). Each iteration is one
+shuffle (two jobs under AQE: the map stage and the collect), so a cold
+build fires at most 1 + 2·KMEANS_ITERATIONS jobs; the returned
+assignment plan is map-only. (The previous broadcast-crossJoin
+formulation shuffled every vector's 64-double array ×K through a groupBy
+argmin: measured 5.2 s → 1.6 s at sf0.1 for the training loop; the
+(cluster, dim) posexplode aggregate that followed it needed a second
+shuffle per iteration, 10 build jobs instead of 7.)
+
+Build cost (driver→JVM): the centroid literal and the per-row argmin
+are each ONE SQL-text `F.expr` (functions/literals.py) instead of K·dims
+`F.lit` calls plus a Python lambda tree per iteration, and the per-
+coordinate means are one more. A cold build at sf0.01 (4-core VM,
+local[4]) went from about 14,000 py4j round trips and 10 jobs (build
+median 4.1 s) to about 500 round trips and 7 jobs (2.5 s), with
+identical rows. Persisting or repartitioning the training set as well
+measured slower in a prototype (3.0 s against 2.6 s): the scan is
+cheaper than the cache materialization.
 """
 
 from __future__ import annotations
@@ -36,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hedera_spark.functions.literals import double_array_sql
 from hedera_spark.operators.similarity import _dot
 from hedera_spark.sources.tables import load_table, table_state_key
 
@@ -43,35 +58,28 @@ KMEANS_K = 8
 KMEANS_ITERATIONS = 3
 
 
-def _dist2(a, b):
-    """Rounded squared euclidean distance — sequential fold, quantized to
-    6 decimals so both engines rank candidates on identical doubles."""
-    return F.round(
-        F.aggregate(
-            F.zip_with(
-                a,
-                b,
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
+# Rounded squared euclidean distance between the row's `emb` and the
+# centroid lambda variable `c`, as SQL text: a sequential fold of double
+# products from a 0.0D seed (a bare 0.0 is a DECIMAL in Spark SQL),
+# quantized to 6 decimals so both engines rank candidates on identical
+# doubles.
+_DIST2_SQL = (
+    "round(aggregate(zip_with(emb, c.cemb, (x, y) -> "
+    "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
+    "0.0D, (acc, v) -> acc + v), 6)"
+)
 
 
-def _cent_lit(cent_rows) -> F.Column:
-    """The K centroids as one literal array<struct<cid, cemb>> column —
-    the parameter-server payload the per-row argmin folds over."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(cid).cast("long").alias("cid"),
-                F.array(*[F.lit(float(v)) for v in cemb]).alias("cemb"),
-            )
+def _cent_lit(cent_rows) -> str:
+    """The K centroids as SQL text for one literal
+    array<struct<cid: bigint, cemb: array<double>>> — the parameter-server
+    payload the per-row argmin folds over (functions/literals.py: bit-exact
+    doubles, the whole array parsed in one driver→JVM call)."""
+    return "array({})".format(
+        ", ".join(
+            f"named_struct('cid', {int(cid)}L, 'cemb', {double_array_sql(cemb)})"
             for cid, cemb in cent_rows
-        ]
+        )
     )
 
 
@@ -79,21 +87,18 @@ def _assign(emb: DataFrame, cent_rows) -> DataFrame:
     """(vec_id, emb, cluster_id, dist2): nearest centroid per vector —
     pure map: per-row fold over the literal centroid array, argmin via
     struct-ordered array_min (ties to the smallest centroid id). No
-    shuffle, no row amplification."""
-    best = F.array_min(
-        F.transform(
-            _cent_lit(cent_rows),
-            lambda c: F.struct(
-                _dist2(F.col("emb"), c["cemb"]).alias("d"),
-                c["cid"].alias("c"),
-            ),
-        )
+    shuffle, no row amplification. The argmin is one SQL expression
+    (one driver→JVM call), computed once per row into `best`, whose two
+    fields are then projected."""
+    best = F.expr(
+        f"array_min(transform({_cent_lit(cent_rows)}, "
+        f"c -> named_struct('d', {_DIST2_SQL}, 'c', c.cid)))"
     )
-    return emb.select(
+    return emb.select("vec_id", "emb", best.alias("best")).select(
         "vec_id",
         "emb",
-        best["c"].alias("cluster_id"),
-        best["d"].alias("dist2"),
+        F.col("best.c").alias("cluster_id"),
+        F.col("best.d").alias("dist2"),
     )
 
 
@@ -142,22 +147,18 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not cent_rows:
         _CENTROID_REGISTRY[model_key] = []
         return _empty_assign(emb).select("vec_id", "cluster_id", "dist2")
+    # one aggregate per coordinate, grouped on the cluster alone: one
+    # partial-agg shuffle of at most K rows per partition per iteration
+    means = F.expr(
+        "array({})".format(
+            ", ".join(f"round(avg(get(emb, {i})), 6)" for i in range(len(cent_rows[0][1])))
+        )
+    )
     for _ in range(KMEANS_ITERATIONS):
         new_cents = (
             _assign(emb, cent_rows)
-            .select(
-                F.col("cluster_id").alias("cid"),
-                F.posexplode("emb").alias("pos", "x"),
-            )
-            .groupBy("cid", "pos")
-            .agg(F.round(F.avg("x"), 6).alias("m"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("cemb")
-            )
+            .groupBy(F.col("cluster_id").alias("cid"))
+            .agg(means.alias("cemb"))
             .collect()
         )
         cent_rows = sorted((r["cid"], r["cemb"]) for r in new_cents)
@@ -326,7 +327,7 @@ def _round6_half_up(x: float) -> float:
 
 
 def _py_dist2(a: list, b: list) -> float:
-    """Driver-side replica of _dist2: LEFT-FOLD summation order, then the
+    """Driver-side replica of _DIST2_SQL: LEFT-FOLD summation order, then the
     HALF_UP quantization — bit-identical to the column expression so pool
     refinement ranks candidates on the same doubles the scan produced."""
     acc = 0.0
@@ -354,11 +355,7 @@ def _coreset_rows(spark: SparkSession, sf_dir: str):
         rows = [(1, seed[0]["vec_id"], None)]
         n_scans = 0
         while len(sel) < CORESET_K:
-            mind = F.array_min(
-                F.transform(
-                    _cent_lit(sel), lambda c: _dist2(F.col("emb"), c["cemb"])
-                )
-            )
+            mind = F.expr(f"array_min(transform({_cent_lit(sel)}, c -> {_DIST2_SQL}))")
             key = F.struct(
                 mind.alias("d"), (-F.col("vec_id")).alias("nid"), F.col("emb").alias("e")
             )
@@ -434,7 +431,7 @@ def coreset_maxmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve (asserted by test).
 
     Determinism: seed = the smallest vec_id; every step takes argmax of
-    the per-vector min rounded distance (the kmeans _dist2 quantization)
+    the per-vector min rounded distance (the kmeans _DIST2_SQL quantization)
     with ties to the smallest vec_id — identical in the unrolled
     DuckDB oracle (ORDER BY mind DESC, vec_id LIMIT 1, with the same
     already-selected-at-distance-0 stop).

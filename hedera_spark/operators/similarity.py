@@ -23,6 +23,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hedera_spark.functions.literals import double_array
+from hedera_spark.plans.broadcast import broadcast_if_fits
 from hedera_spark.sources.tables import load_table
 
 N_PLANES = 8
@@ -53,10 +55,7 @@ def _bcast_queries(q: DataFrame) -> DataFrame:
     limit = int(
         os.environ.get(ANN_BROADCAST_MAX_BYTES_ENV, _ANN_BROADCAST_MAX_DEFAULT)
     )
-    est = int(str(q._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    if est <= limit:
-        return F.broadcast(q)
-    return q
+    return broadcast_if_fits(q, limit)
 
 
 def _sign_from_seed(seed: str) -> float:
@@ -105,7 +104,7 @@ def _with_bucket(df: DataFrame) -> DataFrame:
     """Append the sign-LSH bucket id: bit p = (v · plane_p) > 0."""
     bucket = F.lit(0)
     for p, plane in enumerate(PLANES):
-        lit_plane = F.array([F.lit(s) for s in plane])
+        lit_plane = double_array(plane)
         bucket = bucket + F.when(
             _dot(F.col("embedding"), lit_plane) > 0, F.lit(1 << p)
         ).otherwise(F.lit(0))
@@ -321,7 +320,7 @@ def _with_table_buckets(df: DataFrame) -> DataFrame:
     for t in range(N_TABLES):
         bucket = F.lit(0)
         for p, plane in enumerate(table_planes(t)):
-            lit_plane = F.array([F.lit(s) for s in plane])
+            lit_plane = double_array(plane)
             bucket = bucket + F.when(
                 _dot(F.col("embedding"), lit_plane) > 0, F.lit(1 << p)
             ).otherwise(F.lit(0))
@@ -1456,7 +1455,7 @@ def _with_adaptive_bucket(df: DataFrame, nbits: int) -> DataFrame:
     evaluated — the mask is free)."""
     bucket = F.lit(0)
     for p in range(nbits):
-        lit_plane = F.array([F.lit(s) for s in ADAPTIVE_PLANES[p]])
+        lit_plane = double_array(ADAPTIVE_PLANES[p])
         bucket = bucket + F.when(
             _dot(F.col("embedding"), lit_plane) > 0, F.lit(1 << p)
         ).otherwise(F.lit(0))

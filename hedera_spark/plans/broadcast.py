@@ -1,0 +1,29 @@
+"""Size-gated broadcast: hint a join side only when the planner's own
+size estimate fits a ceiling.
+
+A frame whose size grows with the corpus (a fixed fraction of it, or a
+Zipf tail of its vocabulary) is under a megabyte at the test scale
+factors, where broadcasting it is the right plan, and terabytes at the
+declared scale, where an unconditional `F.broadcast` would exhaust the
+driver and every executor (Spark caps a broadcast at 8 GB). Above the
+ceiling the frame is returned unhinted, so the planner falls back to a
+shuffled join, which is memory-safe. Reading the estimate fires no Spark
+job.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+
+def plan_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate for `df`, in bytes. Without CBO a
+    filter is not discounted, so the estimate errs high."""
+    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+
+def broadcast_if_fits(df: DataFrame, max_bytes: int) -> DataFrame:
+    """`F.broadcast(df)` when its estimate is at most `max_bytes`, else
+    `df` unchanged."""
+    return F.broadcast(df) if plan_bytes(df) <= max_bytes else df

@@ -43,6 +43,15 @@ def get_spark(app_name: str = "hedera_spark", shuffle_partitions: int | None = N
         # converts the long back to a proper TimestampType column
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # PySpark 4 records the Python call site of every wrapped
+        # `functions.*` / Column call for error messages, several JVM
+        # round trips each, and building a query makes hundreds of such
+        # calls (measured at sf0.01 with cached schemas: tpch_q5 510 ->
+        # 200 round trips per build, dedup_minhash about 2,100 -> 1,100,
+        # kmeans_embeddings 870 -> 450). Analysis errors still name the
+        # offending column; only the Python line is dropped. A static
+        # conf: it applies to sessions this builder creates.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 
@@ -70,6 +79,14 @@ def reset_session_state(spark: SparkSession) -> None:
     bench.py calls this between reps; the plan-audit tests call it
     before asserting plan shapes; any driver embedding the engine in a
     long-lived session should call it between independent queries.
+
+    One process cache deliberately survives a reset: the parquet schemas
+    `sources.tables.load_table` inferred (`tables._SCHEMA_CACHE`). A
+    cached schema is a pure function of its key, the table path plus the
+    size/mtime fingerprint of its files, so it can never go stale or
+    change a plan; a rewrite in place changes the key and re-infers.
+    Clearing it would only put one footer-reading Spark job back into
+    every table load of the next query.
     """
     spark.catalog.clearCache()
     from hedera_spark.operators import importance, kmeans

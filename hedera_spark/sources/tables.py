@@ -32,6 +32,17 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# The schema `spark.read.parquet` inferred for each table, keyed by
+# table_state_key (path plus file size/mtime fingerprint). Inference reads
+# the parquet footers in a Spark job on every read; a reread with the
+# cached schema fires none. A rewrite in place changes the fingerprint and
+# so re-infers. A key that could not be stat'ed (path-only, length 1) is
+# never cached: nothing would notice the data changing under it. The
+# inferred schema also depends on the reader confs, which load_table pins
+# itself (nanosAsLong) before every read.
+_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
@@ -41,11 +52,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # host session's zone.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    key = table_state_key(sf_dir, name)
+    schema = _SCHEMA_CACHE.get(key)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if schema is None:
+        schema = df.schema
+        if len(key) > 1:
+            _SCHEMA_CACHE[key] = schema
     # Nanos columns arrive as LongType under the legacy conf; restore them
     # to TimestampType at microsecond precision (matching DuckDB's
     # ns→us truncation) so downstream operators see real timestamps.
-    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+    if name == "events" and isinstance(schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
 

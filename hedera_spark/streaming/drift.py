@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hedera_spark.functions.literals import double_array
 from hedera_spark.operators.profile import DRIFT_QS
 from hedera_spark.sources.tables import load_table
 from hedera_spark.streaming.source import event_stream
@@ -45,7 +46,7 @@ def baseline_fences(spark: SparkSession, sf_dir: str) -> list[float]:
 def bucket_expr(fences: list[float]):
     """Row-local decile assignment against literal fences — identical to
     profile_drift's batch bucketing (count of fences below the value)."""
-    arr = F.array(*[F.lit(float(x)) for x in fences])
+    arr = double_array(fences)
     return (F.size(F.filter(arr, lambda f: F.col("value") > f)) + 1).cast(
         "long"
     )

@@ -1,0 +1,205 @@
+"""Build-path cost: the Spark jobs and driver→JVM round trips a query
+pays while its plan is being built, before any action runs.
+
+- `load_table` caches each parquet schema it inferred, so a reread fires
+  no footer-reading job, and a rewrite in place still re-infers.
+- k-means writes its centroid literal and argmin as SQL text (one call
+  each, bit-exact doubles), so a cold build stays within a job budget
+  and a round-trip ceiling.
+- The session turns PySpark's per-call origin capture off; analysis
+  errors must still name the offending column.
+"""
+
+from __future__ import annotations
+
+import os
+import struct
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from tests.conftest import SF_DIR
+
+
+def _jobs_fired(spark, fn) -> int:
+    """Spark jobs `fn` fires, counted by the statusTracker under a job
+    group of its own (after the listener bus has caught up)."""
+    sc = spark.sparkContext
+    group = f"build-path-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_embeddings(path, with_label: bool) -> None:
+    cols = {
+        "vec_id": pa.array([1, 2, 3], type=pa.int64()),
+        "embedding": pa.array([[1.0, 0.0], [0.0, 1.0], [1.0, 1.0]], type=pa.list_(pa.float32())),
+    }
+    if with_label:
+        cols["label"] = pa.array([0, 1, 0], type=pa.int32())
+    pq.write_table(pa.table(cols), path)
+
+
+# --- schema cache in load_table ---------------------------------------
+
+
+def test_repeated_load_table_fires_no_job(spark, tmp_path):
+    from hedera_spark.sources.tables import load_table
+
+    _write_embeddings(tmp_path / "embeddings.parquet", with_label=True)
+    # the first read infers the schema (the footer job), which also
+    # shows the counter sees jobs at all
+    assert _jobs_fired(spark, lambda: load_table(spark, str(tmp_path), "embeddings")) >= 1
+    assert _jobs_fired(spark, lambda: load_table(spark, str(tmp_path), "embeddings")) == 0
+    assert load_table(spark, str(tmp_path), "embeddings").count() == 3
+
+
+def test_load_table_rereads_schema_after_inplace_rewrite(spark, tmp_path):
+    """Same path, new file with a different schema: the fingerprint
+    changes, so the new schema is inferred, not the cached one served."""
+    from hedera_spark.sources.tables import load_table, table_state_key
+
+    path = tmp_path / "embeddings.parquet"
+    _write_embeddings(path, with_label=False)
+    key1 = table_state_key(str(tmp_path), "embeddings")
+    first = load_table(spark, str(tmp_path), "embeddings")
+    assert first.columns == ["vec_id", "embedding"]
+    # rewrite in place with a DIFFERENT schema; bump mtime explicitly so
+    # the test never races a same-nanosecond rewrite
+    _write_embeddings(path, with_label=True)
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    assert table_state_key(str(tmp_path), "embeddings") != key1
+    second = load_table(spark, str(tmp_path), "embeddings")
+    assert second.columns == ["vec_id", "embedding", "label"]
+    assert sorted(r["label"] for r in second.collect()) == [0, 0, 1]
+
+
+def test_unfingerprinted_path_is_never_cached(spark, tmp_path, monkeypatch):
+    """A key of length 1 (a path the driver could not stat) carries no
+    fingerprint, so nothing would notice a rewrite: never cache it."""
+    from hedera_spark.sources import tables
+
+    _write_embeddings(tmp_path / "embeddings.parquet", with_label=True)
+    monkeypatch.setattr(
+        tables, "table_state_key", lambda sf_dir, name: (os.path.join(sf_dir, f"{name}.parquet"),)
+    )
+    before = dict(tables._SCHEMA_CACHE)
+    for _ in range(2):
+        assert _jobs_fired(spark, lambda: tables.load_table(spark, str(tmp_path), "embeddings")) >= 1
+    assert tables._SCHEMA_CACHE == before
+
+
+# --- k-means build path ------------------------------------------------
+
+_AWKWARD = [
+    -0.0,
+    0.0,
+    5e-324,  # smallest subnormal
+    2.2250738585072014e-308,  # smallest normal
+    1.7976931348623157e308,
+    -1.7976931348623157e308,
+    0.1,
+    -7.28e-4,
+    1e16,
+    123456789.12345679,
+    float("nan"),
+    float("inf"),
+    float("-inf"),
+]
+
+
+def _bits(v: float) -> bytes:
+    return struct.pack("<d", v)
+
+
+def test_sql_text_literals_are_bit_exact(spark):
+    from pyspark.sql import functions as F
+
+    from hedera_spark.functions.literals import double_array
+    from hedera_spark.operators.kmeans import _cent_lit
+
+    cent_rows = [(7, _AWKWARD), (-3, list(reversed(_AWKWARD)))]
+    by_lit = F.array(
+        *[
+            F.struct(
+                F.lit(cid).cast("long").alias("cid"),
+                F.array(*[F.lit(float(v)) for v in cemb]).alias("cemb"),
+            )
+            for cid, cemb in cent_rows
+        ]
+    )
+    df = spark.range(1).select(
+        F.expr(_cent_lit(cent_rows)).alias("sql"),
+        by_lit.alias("lit"),
+        double_array(_AWKWARD).alias("arr"),
+    )
+    assert df.schema["sql"].dataType == df.schema["lit"].dataType
+    row = df.collect()[0]
+    got = [(c["cid"], [_bits(v) for v in c["cemb"]]) for c in row["sql"]]
+    want = [(c["cid"], [_bits(v) for v in c["cemb"]]) for c in row["lit"]]
+    assert got == want
+    assert [_bits(v) for v in row["arr"]] == [_bits(v) for v in _AWKWARD]
+
+
+def test_kmeans_build_job_budget(spark):
+    """A cold build: one init pull, then one shuffle (map stage + collect
+    job) per Lloyd iteration."""
+    from hedera_spark.operators.kmeans import KMEANS_ITERATIONS, kmeans_embeddings
+    from hedera_spark.session import reset_session_state
+    from hedera_spark.sources.tables import load_table
+
+    reset_session_state(spark)
+    load_table(spark, SF_DIR, "embeddings")  # schema cached: no load job below
+    jobs = _jobs_fired(spark, lambda: kmeans_embeddings(spark, SF_DIR))
+    assert 1 <= jobs <= 1 + 2 * KMEANS_ITERATIONS
+
+
+def test_kmeans_build_round_trip_ceiling(spark, monkeypatch):
+    """Driver→JVM round trips for a cold build. Element-wise `F.lit`
+    centroids cost ~14k; the SQL-text literals about 500."""
+    from py4j import clientserver
+
+    from hedera_spark.operators.kmeans import kmeans_embeddings
+    from hedera_spark.session import reset_session_state
+
+    reset_session_state(spark)
+    calls = [0]
+    send = clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(clientserver.ClientServerConnection, "send_command", counting)
+    kmeans_embeddings(spark, SF_DIR)
+    monkeypatch.undo()
+    assert 0 < calls[0] <= 1500
+
+
+# --- origin capture off -----------------------------------------------
+
+
+def test_missing_column_still_named_with_debugging_off(spark, tmp_path):
+    """With `spark.python.sql.dataFrameDebugging.enabled` off, an operator
+    reading a column its input lacks still fails at build time with an
+    AnalysisException that names the column."""
+    from pyspark.errors import AnalysisException
+    from pyspark.errors.utils import is_debugging_enabled
+
+    from hedera_spark.operators.timeseries import pv_daily
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+    events = pq.read_table(os.path.join(SF_DIR, "events.parquet")).drop(["user_id"])
+    pq.write_table(events, tmp_path / "events.parquet")
+    with pytest.raises(AnalysisException, match="user_id"):
+        pv_daily(spark, str(tmp_path))

@@ -23,24 +23,21 @@ _EMPTY_SCHEMAS = {
 }
 
 
-_EMPTY_SF_CACHE: dict[str, str] = {}
-
-
-def _empty_sf(spark, tmp_path):
+@pytest.fixture(scope="session")
+def empty_sf(spark, tmp_path_factory) -> str:
     """An sf_dir where every table has the right schema and zero rows.
 
     Built ONCE per session and reused: the dir is read-only for every
     consumer, and rebuilding the 10 empty parquet writes per
     parametrized case was ~40% of the whole suite's wall clock (r8
-    durations: 154 of the top-200 slowest tests were these)."""
-    if "dir" in _EMPTY_SF_CACHE:
-        return _EMPTY_SF_CACHE["dir"]
-    out = tmp_path / "empty"
+    durations: 154 of the top-200 slowest tests were these). The
+    session-owned directory keeps the cases independent of which test
+    runs first."""
+    out = tmp_path_factory.mktemp("empty_sf")
     for name, schema in _EMPTY_SCHEMAS.items():
         spark.createDataFrame([], schema).write.parquet(
             str(out / f"{name}.parquet")
         )
-    _EMPTY_SF_CACHE["dir"] = str(out)
     return str(out)
 
 
@@ -276,20 +273,20 @@ def _empty_sf(spark, tmp_path):
         "mix_budget_waterfill",
     ],
 )
-def test_operators_tolerate_empty_input(spark, tmp_path, qname):
+def test_operators_tolerate_empty_input(spark, empty_sf, qname):
     from hedera_spark.registry import QUERIES
 
-    sf = _empty_sf(spark, tmp_path)
+    sf = empty_sf
     assert QUERIES[qname](spark, sf).count() == 0
 
 
-def test_fk_integrity_empty_input_reports_all_edges(spark, tmp_path):
+def test_fk_integrity_empty_input_reports_all_edges(spark, empty_sf):
     """The audit is a fixed-shape report: on empty tables it must still
     emit one all-zero row per FK edge (a missing edge row would read as
     'not audited', not 'clean')."""
     from hedera_spark.operators.profile import FK_EDGES, fk_integrity
 
-    sf = _empty_sf(spark, tmp_path)
+    sf = empty_sf
     rows = fk_integrity(spark, sf).collect()
     assert len(rows) == len(FK_EDGES)
     for r in rows:
@@ -349,38 +346,38 @@ def test_r3_operators_on_degenerate_corpus(spark, tmp_path):
     assert corpus_delta(spark, d).count() >= 1
 
 
-def test_data_profile_on_empty_table(spark, tmp_path):
+def test_data_profile_on_empty_table(spark, empty_sf):
     """The exact profile still emits one row per column on an empty
     table (zero counts, NULL min/max) — it must not collapse to zero
     rows or crash."""
     from hedera_spark.operators.profile import data_profile
 
-    sf = _empty_sf(spark, tmp_path)
+    sf = empty_sf
     rows = data_profile(spark, sf).collect()
     assert len(rows) == 6
     assert all(r["n_rows"] == 0 and r["n_distinct"] == 0 for r in rows)
     assert all(r["min_num"] is None and r["min_str"] is None for r in rows)
 
 
-def test_erasure_impact_empty_input_reports_all_tables(spark, tmp_path):
+def test_erasure_impact_empty_input_reports_all_tables(spark, empty_sf):
     """Like fk_integrity: the blast-radius audit is a fixed-shape report —
     empty tables must still yield one all-zero row per audited table."""
     from hedera_spark.operators.profile import erasure_impact
 
-    sf = _empty_sf(spark, tmp_path)
+    sf = empty_sf
     rows = {r["table_name"]: r for r in erasure_impact(spark, sf).collect()}
     assert set(rows) == {"customer", "events", "lineitem", "orders"}
     assert all(r["n_total"] == 0 and r["n_erased"] == 0 for r in rows.values())
 
 
-def test_agreement_reports_tolerate_empty_input(spark, tmp_path):
+def test_agreement_reports_tolerate_empty_input(spark, empty_sf):
     """gate_agreement / retrieval_ndcg are global-aggregate reports: on
     empty input they must not throw, and their count/overlap cells must
     read zero (null rates are fine — 0/0 has no value)."""
     from hedera_spark.operators.importance import gate_agreement
     from hedera_spark.operators.ir import retrieval_ndcg
 
-    sf = _empty_sf(spark, tmp_path)
+    sf = empty_sf
     ga = gate_agreement(spark, sf).collect()
     assert {r["pair"] for r in ga} == {
         "heuristic-vs-classifier",
@@ -404,24 +401,24 @@ def test_agreement_reports_tolerate_empty_input(spark, tmp_path):
     assert len(va) == 1 and va[0]["n_groups"] == 0 and va[0]["f_stat"] is None
 
 
-def test_table_fingerprint_empty_input_reports_all_tables(spark, tmp_path):
+def test_table_fingerprint_empty_input_reports_all_tables(spark, empty_sf):
     """Fixed-shape report: empty tables must still yield one row per
     table with n_rows = 0 and the neutral checksum 0."""
     from hedera_spark.operators.profile import FP_COLUMNS, table_fingerprint
 
-    sf = _empty_sf(spark, tmp_path)
+    sf = empty_sf
     rows = {r["table_name"]: r for r in table_fingerprint(spark, sf).collect()}
     assert set(rows) == set(FP_COLUMNS)
     assert all(r["n_rows"] == 0 and r["checksum"] == 0 for r in rows.values())
 
 
-def test_constraint_audit_empty_input_reports_all_checks(spark, tmp_path):
+def test_constraint_audit_empty_input_reports_all_checks(spark, empty_sf):
     """Fixed-shape report: on empty tables the audit must still emit
     every constraint row, all clean with integer-zero violations (a
     missing row would read as 'not audited'; a NULL as corruption)."""
     from hedera_spark.operators.profile import constraint_audit
 
-    sf = _empty_sf(spark, tmp_path)
+    sf = empty_sf
     rows = constraint_audit(spark, sf).collect()
     assert len(rows) == 10
     for r in rows:
@@ -429,41 +426,41 @@ def test_constraint_audit_empty_input_reports_all_checks(spark, tmp_path):
         assert r["passed"] is True
 
 
-def test_ab_permutation_test_empty_input(spark, tmp_path):
+def test_ab_permutation_test_empty_input(spark, empty_sf):
     """The 1-row experiment readout must not raise on an empty log:
     group stats and p-value are NULL (nothing observed), never a
     division error."""
     from hedera_spark.operators.timeseries import ab_permutation_test
 
-    sf = _empty_sf(spark, tmp_path)
+    sf = empty_sf
     rows = ab_permutation_test(spark, sf).collect()
     assert len(rows) == 1
     assert rows[0]["p_value"] is None
 
 
-def test_classifier_auc_empty_input(spark, tmp_path):
+def test_classifier_auc_empty_input(spark, empty_sf):
     """1-row readout must not raise on an empty corpus: counts and AUC
     are NULL (nothing scored), never a division error."""
     from hedera_spark.operators.text_analysis import classifier_auc
 
-    sf = _empty_sf(spark, tmp_path)
+    sf = empty_sf
     rows = classifier_auc(spark, sf).collect()
     assert len(rows) == 1
     assert rows[0]["auc_en"] is None
 
 
-def test_dedup_candidate_volume_empty_input(spark, tmp_path):
+def test_dedup_candidate_volume_empty_input(spark, empty_sf):
     """Fixed-shape dial: an empty corpus still reports one row per
     method, each with zero candidates."""
     from hedera_spark.operators.dedup import dedup_candidate_volume
 
-    sf = _empty_sf(spark, tmp_path)
+    sf = empty_sf
     rows = {r["method"]: r["n_candidates"]
             for r in dedup_candidate_volume(spark, sf).collect()}
     assert rows == {"ngram_jaccard": 0, "minhash_lsh": 0, "simhash_block": 0}
 
 
-def test_page_depth_stats_empty_and_planted_hot(spark, tmp_path):
+def test_page_depth_stats_empty_and_planted_hot(spark, empty_sf, tmp_path):
     """Router observability: empty tables yield zero pages (null depth
     bounds, zero hot); a planted 500-deep page is counted hot."""
     import pyarrow as pa
@@ -471,7 +468,7 @@ def test_page_depth_stats_empty_and_planted_hot(spark, tmp_path):
 
     from hedera_spark.operators.revisions import page_depth_stats
 
-    sf = _empty_sf(spark, tmp_path)
+    sf = empty_sf
     rows = {r["table_name"]: r for r in page_depth_stats(spark, sf).collect()}
     assert set(rows) == {"revisions", "snapshots"}
     assert all(

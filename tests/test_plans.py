@@ -575,6 +575,39 @@ def test_ann_query_broadcast_is_size_gated(spark, monkeypatch):
     assert shuffled == base
 
 
+def test_dedup_cold_route_broadcast_is_size_gated(spark, monkeypatch):
+    """_pair_stats' cold route joins every exploded shingle with the
+    COLD (df <= cap) vocabulary, a Zipf tail that grows with the corpus.
+    Its broadcast goes through the same planner-estimate gate as the ANN
+    query side: under the ceiling the join is broadcast; at ceiling 0
+    (auto-broadcast off too) it is a shuffled join with identical rows."""
+    from hedera_spark.operators import dedup
+    from hedera_spark.session import reset_session_state
+
+    base = {tuple(r) for r in dedup.dedup_ngram_jaccard(spark, SF_DIR).collect()}
+    # force the cold route on the small test corpus: probe always, and
+    # any hot-set size (even 0) above the array route's bound
+    monkeypatch.setattr(dedup, "HOT_ROUTE_PROBE_MIN_BYTES", 0)
+    monkeypatch.setattr(dedup, "HOT_SET_ARRAY_ROUTE_MAX", -1)
+    reset_session_state(spark)
+    cold = dedup.dedup_ngram_jaccard(spark, SF_DIR)
+    assert has_broadcast_join(cold)
+    assert {tuple(r) for r in cold.collect()} == base
+
+    monkeypatch.setattr(dedup, "COLD_VOCAB_BROADCAST_MAX_BYTES", 0)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        reset_session_state(spark)
+        df = dedup.dedup_ngram_jaccard(spark, SF_DIR)
+        assert not has_broadcast_join(df)
+        shuffled = {tuple(r) for r in df.collect()}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        reset_session_state(spark)
+    assert shuffled == base
+
+
 def test_reset_session_state_clears_all_persisted_frames(spark):
     """Several operators deliberately leak persisted frames past return
     (quality_classifier, skipgram_pairs, the ann dials, the bm25
