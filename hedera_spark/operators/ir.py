@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hedera_spark.operators.anchors import _doc_tokens
+from hedera_spark.plans.range_scan import range_prefix_scan
 
 
 def bow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -52,9 +53,6 @@ def term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DICTIONARY_RANGE_PARTITIONS = 8
-
-
 def dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """term → dense id (1-based, lexicographic) + df. Reference:
     mapreduce/BuildDictionary.java (sorted terms → sequential ids; the
@@ -62,10 +60,9 @@ def dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A bare `row_number() OVER (ORDER BY term)` would funnel the whole
     vocabulary through ONE task — the same single-reducer bottleneck the
-    reference has. Instead: range-partition by term, rank locally, then
-    add per-partition offsets (a broadcast of |partitions| rows). Ids are
-    identical to the global row_number because range partitions are
-    ordered; the sort now scales with executors. At 100 TB vocabularies
+    reference has. The ids come from the range-partitioned prefix scan
+    (plans/range_scan.py) instead: identical to the global row_number,
+    with the sort spread over the executors. At 100 TB vocabularies
     reach 10^8+ terms, where this is the difference between minutes and a
     stuck stage."""
     df_ = (
@@ -73,25 +70,8 @@ def dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("anchor").alias("term"))
         .agg(F.count(F.lit(1)).alias("df"))
     )
-    # persisted: pid comes from spark_partition_id(), and the lineage
-    # branches (offsets aggregate + final join) — without materialization a
-    # recompute could re-sample different range boundaries and corrupt ids
-    parted = (
-        df_.repartitionByRange(DICTIONARY_RANGE_PARTITIONS, "term")
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    w_local = Window.partitionBy("pid").orderBy("term")
-    local = parted.withColumn("local_rank", F.row_number().over(w_local).cast("long"))
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        local.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("offset", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)))
-        .select("pid", "offset")
-    )
-    return local.join(F.broadcast(offsets), "pid").select(
-        "term", (F.col("offset") + F.col("local_rank")).alias("term_id"), "df"
+    return range_prefix_scan(df_, ["term"], rank="term_id").select(
+        "term", "term_id", "df"
     )
 
 

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hedera_spark.operators.profile import EVENT_CHECKSUM_SERIAL
+from hedera_spark.plans.range_scan import range_prefix_scan
 from hedera_spark.sources.tables import TABLES, load_table
 
 # join_size_estimate: number of exact most-common-values kept; the tail
@@ -602,8 +603,8 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     path instead.
 
     Scale: the 17 exact boundaries come from the range-partitioned
-    global-rank discipline (tpch._global_rank — never a one-reducer
-    sort or a single-node percentile map): rank the column distributed,
+    prefix scan (plans/range_scan.py — never a one-reducer sort or a
+    single-node percentile map): rank the column distributed,
     broadcast-join the ≤34 needed order statistics out, interpolate
     row-locally. Bucket assignment is then a map-side array scan
     against the 1-row broadcast boundary vector and one ≤16-group agg.
@@ -614,12 +615,10 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo + (pos − floor(pos))·(hi − lo) with pos = (k/16)·(n−1) — k/16 is
     binary-exact — and boundaries round(…, 6) BEFORE assignment so both
     engines compare against identical doubles; counts exact BIGINT."""
-    from hedera_spark.operators.tpch import _global_rank
-
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("x")
     )
-    ranked = _global_rank(li, ["x"], "r")  # 1..n, ties broken arbitrarily (values equal)
+    ranked = range_prefix_scan(li, ["x"], rank="r")  # 1..n, ties broken arbitrarily (values equal)
     n1 = li.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
     # the ≤34 order statistics the 17 interpolated boundaries need
     pos = (

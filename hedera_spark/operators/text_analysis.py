@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hedera_spark.plans.range_scan import range_prefix_scan
 from hedera_spark.sources.tables import load_table
 
 # Marker-token sets per language: the lang-id signal. The test corpus is a
@@ -166,7 +167,6 @@ def corpus_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PACK_CAPACITY = 256  # tokens per packed sequence bin
-PACK_RANGE_PARTITIONS = 8
 
 
 def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,42 +179,17 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: a bare `sum() OVER (PARTITION BY lang ORDER BY doc_id)` would
     funnel each language through ONE task — at 100 TB a handful of tasks
-    carry the whole corpus. Instead the prefix sum is computed the way
-    ir.dictionary ranks its vocabulary: range-partition by (lang, doc_id),
-    cumsum locally per partition, then add per-(partition, lang) offsets
-    via a broadcast of |partitions|×|langs| rows. Range partitioning
-    makes partition order == doc_id order within a language, so the
-    result is identical to the global window while the heavy cumsum runs
-    on every executor."""
-    from pyspark.sql import Window
-
+    carry the whole corpus. The prefix sum comes from the range-
+    partitioned prefix scan (plans/range_scan.py) grouped by lang,
+    identical to the global window while the cumsum runs on every
+    executor; a null lang is a language of its own, as in the window."""
     toks = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
     )
-    # persisted: pid comes from spark_partition_id() and the lineage
-    # branches (offsets aggregate + final join) — a recompute could
-    # re-sample different range boundaries and corrupt the prefix sums
-    parted = (
-        toks.repartitionByRange(PACK_RANGE_PARTITIONS, "lang", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    w_local = Window.partitionBy("pid", "lang").orderBy("doc_id")
-    local = parted.withColumn("local_cum", F.sum("n_tokens").over(w_local))
-    w_off = (
-        Window.partitionBy("lang")
-        .orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        local.groupBy("pid", "lang")
-        .agg(F.sum("n_tokens").alias("part_tokens"))
-        .withColumn("offset", F.coalesce(F.sum("part_tokens").over(w_off), F.lit(0)))
-        .select("pid", "lang", "offset")
-    )
     return (
-        local.join(F.broadcast(offsets), ["pid", "lang"])
-        .withColumn("cum_tokens", F.col("offset") + F.col("local_cum"))
+        range_prefix_scan(
+            toks, ["doc_id"], sums={"cum_tokens": "n_tokens"}, group=["lang"]
+        )
         .select(
             "doc_id",
             "lang",
@@ -1302,8 +1277,8 @@ def sample_fixed_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the order is a content-free hash, not a scan order).
 
     Scale: one rank window per language over (hash, doc_id). At 100 TB
-    the per-stratum TopK would use the range-partitioned local-rank
-    pattern (dictionary's) or a partial TakeOrdered per partition; for
+    the per-stratum TopK would use the range-partitioned prefix scan
+    (plans/range_scan.py) or a partial TakeOrdered per partition; for
     k ≪ partition counts Spark's window with a running rank ≤ K
     prune-early is adequate, and K rows per group is the output bound."""
     docs = load_table(spark, sf_dir, "documents")
@@ -1341,7 +1316,6 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 VOCAB_SIZES = [100, 1000, 10000]
-VOCAB_RANGE_PARTITIONS = 32
 
 
 def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1352,12 +1326,9 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape statistic). Output: (vocab_size, covered_tokens, total_tokens,
     coverage).
 
-    The global frequency rank is computed with the range-partitioned
-    local-rank + broadcast-offset pattern (the key_skew_stats/dictionary
-    discipline) — never a single-reducer sort: terms are range-
-    partitioned by (count desc, term), ranked locally, and each
-    partition's rank offset is the broadcast count of terms in the
-    partitions before it.
+    The global frequency rank over (count desc, term) comes from the
+    range-partitioned prefix scan (plans/range_scan.py) — never a
+    single-reducer sort.
 
     Determinism: counts and ranks are exact integers; coverage is one
     rounded division. Scale: one vocab-bounded agg shuffle, one range
@@ -1370,23 +1341,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("x"))
     )
-    parted = (
-        counts.repartitionByRange(
-            VOCAB_RANGE_PARTITIONS, F.col("x").desc(), F.col("w")
-        )
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    w_local = Window.partitionBy("pid").orderBy(F.desc("x"), "w")
-    local = parted.withColumn("lr", F.row_number().over(w_local))
-    per_part = parted.groupBy("pid").agg(F.count(F.lit(1)).alias("n_p"))
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = per_part.withColumn(
-        "off", F.coalesce(F.sum("n_p").over(w_off), F.lit(0))
-    ).select("pid", "off")
-    ranked = local.join(F.broadcast(offs), "pid").withColumn(
-        "r", F.col("off") + F.col("lr")
-    )
+    ranked = range_prefix_scan(counts, [F.desc("x"), "w"], rank="r")
     agg = ranked.agg(
         F.sum("x").alias("total"),
         *[
@@ -2061,9 +2016,6 @@ def keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-AUC_RANGE_PARTITIONS = 32
-
-
 def quality_score_col() -> "F.Column":
     """The text_quality composite as ONE rounded expression — shared by
     classifier_auc and score_quantile_norm so every consumer groups and
@@ -2104,9 +2056,9 @@ def classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles.
 
     Scale: one doc-keyed scan builds (score, label), one shuffle to
-    |distinct scores| rows, and the running negative count uses the
-    range-partitioned local-cumsum + broadcast-offsets discipline
-    (pack_sequences) — never a one-reducer ORDER BY window. AUC is
+    |distinct scores| rows, and the running negative count comes from
+    the range-partitioned prefix scan (plans/range_scan.py) — never a
+    one-reducer ORDER BY window. AUC is
     direction-coded as P(score_en > score_other): 0.5 = unbiased."""
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
@@ -2114,31 +2066,12 @@ def classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_score_col().alias("score"),
         (F.col("lang") == "en").cast("long").alias("pos"),
     )
-    labeled = scored
-    per_score = labeled.groupBy("score").agg(
+    per_score = scored.groupBy("score").agg(
         F.sum("pos").alias("pos"),
         F.sum(1 - F.col("pos")).alias("neg"),
     )
-    parted = (
-        per_score.repartitionByRange(AUC_RANGE_PARTITIONS, "score")
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy("score")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = parted.withColumn(
-        "_cn", F.coalesce(F.sum("neg").over(w_local), F.lit(0))
-    )
-    per_part = parted.groupBy("_pid").agg(F.sum("neg").alias("_pn"))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = per_part.withColumn(
-        "_noff", F.coalesce(F.sum("_pn").over(w_off), F.lit(0))
-    ).select("_pid", "_noff")
-    cum = local.join(F.broadcast(offs), "_pid").withColumn(
-        "cumneg_below", (F.col("_noff") + F.col("_cn")).cast("long")
+    cum = range_prefix_scan(per_score, ["score"], sums={"cum": "neg"}).withColumn(
+        "cumneg_below", (F.col("cum") - F.col("neg")).cast("long")
     )
     agg = cum.agg(
         F.sum("pos").cast("long").alias("n_pos"),
@@ -2171,34 +2104,31 @@ def score_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     score, doc_id) — the doc_id tie-break makes row_number identical in
     both engines; the quantile is one integer ratio.
 
-    Scale: ONE global rank via the range-partitioned discipline
-    (_global_rank — never a per-source single-partition window, which
-    dies when one source dominates the corpus); within-source rank =
-    global rank minus the source's broadcast min-rank offset
-    (|sources| rows)."""
-    from hedera_spark.operators.tpch import _global_rank
-
+    Scale: the within-source rank comes from the range-partitioned
+    prefix scan grouped by source (plans/range_scan.py) — never a
+    per-source single-partition window, which dies when one source
+    dominates the corpus; src_n is a broadcast of |sources| rows."""
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id", "source", quality_score_col().alias("score")
     )
-    ranked = _global_rank(scored, ["source", "score", "doc_id"], "gr")
-    src = ranked.groupBy("source").agg(
-        F.min("gr").alias("gr0"),
-        F.count(F.lit(1)).cast("long").alias("src_n"),
+    ranked = range_prefix_scan(
+        scored, ["score", "doc_id"], rank="src_rank", group=["source"]
     )
-    out = ranked.join(F.broadcast(src), "source")
-    src_rank = (F.col("gr") - F.col("gr0") + 1).cast("long")
+    src = ranked.groupBy(F.col("source").alias("_src")).agg(
+        F.count(F.lit(1)).cast("long").alias("src_n")
+    )
+    out = ranked.join(F.broadcast(src), F.col("source").eqNullSafe(F.col("_src")))
     return out.select(
         "doc_id",
         "source",
         "score",
-        src_rank.alias("src_rank"),
+        "src_rank",
         "src_n",
         F.round(
             F.when(
                 F.col("src_n") > 1,
-                (src_rank - 1).cast("double")
+                (F.col("src_rank") - 1).cast("double")
                 / (F.col("src_n") - 1).cast("double"),
             ).otherwise(F.lit(0.5)),
             6,
@@ -2222,16 +2152,15 @@ def curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks (tie-broken by doc_id); mean quality from exact Σ round(q·1e6)
     micro-units (the quality_calibration discipline).
 
-    Scale: ONE range-partitioned global rank (_global_rank — never a
-    single-reducer ORDER BY), then a 4-group partial agg."""
-    from hedera_spark.operators.tpch import _global_rank
-
+    Scale: ONE range-partitioned prefix scan for the global rank
+    (plans/range_scan.py — never a single-reducer ORDER BY), then a
+    4-group partial agg."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
         quality_score_col().alias("q"),
     )
-    ranked = _global_rank(docs, ["n_tokens", "doc_id"], "gr")
+    ranked = range_prefix_scan(docs, ["n_tokens", "doc_id"], rank="gr")
     tot = ranked.agg(F.count(F.lit(1)).cast("long").alias("total"))
     phased = ranked.join(F.broadcast(tot)).select(
         F.expr(f"(gr - 1) * {CURRICULUM_PHASES} div total + 1").alias(

@@ -601,10 +601,12 @@ def key_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     this BEFORE choosing salting/bucketing for a 100 TB shuffle.
 
     Gini needs the global rank of every key by count — a single-reducer
-    sort at scale — so the rank is computed with the range-partitioned
-    local-rank + broadcast-offset pattern (the dictionary/pack_sequences
-    discipline): Σ rank·x decomposes into per-partition Σ local_rank·x
-    plus offset·Σx, and no partition ever sees another's rows.
+    sort at scale — so it is range-partitioned as in plans/range_scan.py:
+    Σ rank·x decomposes into per-partition Σ local_rank·x plus
+    offset·Σx, and no partition ever sees another's rows. It stays
+    hand-written because it needs only per-partition moments, never
+    per-row ranks: routing it through range_prefix_scan measured +2
+    exchanges and +1 broadcast-hash join at sf0.001.
 
     Determinism: every moment (n, Σx, Σ rank·x, top shares) is an exact
     integer; the final Gini is a fixed dag of two divisions."""

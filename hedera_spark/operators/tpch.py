@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hedera_spark.plans.range_scan import range_prefix_scan
 from hedera_spark.sources.tables import load_table
 
 
@@ -704,32 +705,6 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 RFM_REF_DATE = "1999-01-01"  # fixed epoch after the last order date
 RFM_BUCKETS = 5
-RFM_RANGE_PARTITIONS = 32
-
-
-def _global_rank(df: DataFrame, order_cols, out: str) -> DataFrame:
-    """Global dense row-number WITHOUT a single-reducer sort: range-
-    partition on the sort key, rank locally, add broadcast per-partition
-    offsets (the vocab_coverage / key_skew_stats discipline)."""
-    from pyspark.sql import Window
-
-    parted = (
-        df.repartitionByRange(RFM_RANGE_PARTITIONS, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    w_local = Window.partitionBy("_pid").orderBy(*order_cols)
-    local = parted.withColumn("_lr", F.row_number().over(w_local))
-    per_part = parted.groupBy("_pid").agg(F.count(F.lit(1)).alias("_np"))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = per_part.withColumn(
-        "_off", F.coalesce(F.sum("_np").over(w_off), F.lit(0))
-    ).select("_pid", "_off")
-    return (
-        local.join(F.broadcast(offs), "_pid")
-        .withColumn(out, (F.col("_off") + F.col("_lr")).cast("long"))
-        .drop("_pid", "_lr", "_off")
-    )
 
 
 def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -746,8 +721,8 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer global ranks with (metric, custkey) total tie-break order,
     NOT engine NTILE, so both engines bucket identically.
 
-    Scale: the three global ranks use the range-partition + broadcast-
-    offset discipline (_global_rank) — never a one-reducer ORDER BY;
+    Scale: the three global ranks come from the range-partitioned
+    prefix scan (plans/range_scan.py) — never a one-reducer ORDER BY;
     N is a 1-row broadcast; everything else is one per-customer agg."""
     orders = load_table(spark, sf_dir, "orders")
     base = orders.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
@@ -762,20 +737,20 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("monetary_cents"),
     )
-    r_rank = _global_rank(
+    r_rank = range_prefix_scan(
         base.select("c_custkey", "recency_days"),
         [F.desc("recency_days"), F.col("c_custkey")],
-        "rr",
+        rank="rr",
     ).select("c_custkey", "rr")
-    f_rank = _global_rank(
+    f_rank = range_prefix_scan(
         base.select("c_custkey", "frequency"),
         [F.col("frequency"), F.col("c_custkey")],
-        "rf",
+        rank="rf",
     ).select("c_custkey", "rf")
-    m_rank = _global_rank(
+    m_rank = range_prefix_scan(
         base.select("c_custkey", "monetary_cents"),
         [F.col("monetary_cents"), F.col("c_custkey")],
-        "rm",
+        rank="rm",
     ).select("c_custkey", "rm")
     n = base.agg(F.count(F.lit(1)).alias("n"))
     q = lambda r: F.expr(  # noqa: E731
@@ -1211,11 +1186,10 @@ def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     i·x reaches 10¹⁸ at warehouse scale, the BIGINT edge); the gini is
     ONE double chain over exact integers, identical in both engines.
 
-    Scale: ONE range-partitioned global rank over (nation, rev,
-    custkey) (_global_rank — never a per-nation single-partition
-    window, which serializes on the dominant nation); within-nation
-    rank = global rank minus the nation's broadcast min-rank offset
-    (25 rows); then one |nations|-bounded agg."""
+    Scale: the within-nation rank over (rev, custkey) comes from the
+    range-partitioned prefix scan grouped by nation (plans/range_scan.py)
+    — never a per-nation single-partition window, which serializes on
+    the dominant nation; then one |nations|-bounded agg."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
@@ -1232,11 +1206,9 @@ def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(rev, cust.c_custkey == rev.o_custkey)
         .select("n_name", "c_custkey", "rev")
     )
-    ranked = _global_rank(per, ["n_name", "rev", "c_custkey"], "gr")
-    off = ranked.groupBy("n_name").agg(F.min("gr").alias("gr0"))
-    r = ranked.join(F.broadcast(off), "n_name").withColumn(
-        "i", (F.col("gr") - F.col("gr0") + 1).cast("decimal(38,0)")
-    )
+    r = range_prefix_scan(
+        per, ["rev", "c_custkey"], rank="i", group=["n_name"]
+    ).withColumn("i", F.col("i").cast("decimal(38,0)"))
     g = r.groupBy("n_name").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum(F.col("rev").cast("decimal(38,0)")).alias("s"),
@@ -1321,14 +1293,11 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded share — so boundary parts classify identically in both
     engines; the published cum_share is one rounded double.
 
-    Scale: one partkey partial agg, then ONE range-partitioned pass
-    producing BOTH the global rank and the global revenue prefix sum
-    (local window + broadcast per-partition (count, sum) offsets — the
-    pack_sequences discipline; never a single-reducer cumulative
-    window), then map-side classification against the broadcast 1-row
+    Scale: one partkey partial agg, then ONE range-partitioned prefix
+    scan (plans/range_scan.py) producing BOTH the global rank and the
+    global revenue prefix sum — never a single-reducer cumulative
+    window — then map-side classification against the broadcast 1-row
     total."""
-    from pyspark.sql import Window
-
     li = load_table(spark, sf_dir, "lineitem")
     rev = (
         li.select(
@@ -1340,33 +1309,11 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey")
         .agg(F.sum("cents").alias("rev"))
     )
-    parted = (
-        rev.withColumn("neg", -F.col("rev"))
-        .repartitionByRange(RFM_RANGE_PARTITIONS, "neg", "l_partkey")
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    w_local = Window.partitionBy("_pid").orderBy("neg", "l_partkey")
-    local = parted.withColumn("_lr", F.row_number().over(w_local)).withColumn(
-        "_lc", F.sum("rev").over(w_local).cast("decimal(38,0)")
-    )
-    per_part = parted.groupBy("_pid").agg(
-        F.count(F.lit(1)).alias("_np"),
-        F.sum("rev").cast("decimal(38,0)").alias("_sp"),
-    )
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = per_part.select(
-        "_pid",
-        F.coalesce(F.sum("_np").over(w_off), F.lit(0)).alias("_offn"),
-        F.coalesce(
-            F.sum("_sp").over(w_off), F.lit(0).cast("decimal(38,0)")
-        ).alias("_offs"),
-    )
-    ranked = local.join(F.broadcast(offs), "_pid").select(
-        "l_partkey",
-        "rev",
-        (F.col("_offn") + F.col("_lr")).cast("long").alias("rk"),
-        (F.col("_offs") + F.col("_lc")).cast("decimal(38,0)").alias("cum"),
+    ranked = range_prefix_scan(
+        rev,
+        [F.desc("rev"), "l_partkey"],
+        rank="rk",
+        sums={"cum": F.col("rev").cast("decimal(38,0)")},
     )
     tot = ranked.agg(F.sum("rev").cast("decimal(38,0)").alias("total"))
     out = ranked.join(F.broadcast(tot))

@@ -240,3 +240,36 @@ def test_iterative_entries_leave_no_sql_cache(name, spark):
     df.collect()
     jcm = spark._jsparkSession.sharedState().cacheManager()
     assert jcm.isEmpty(), f"{name}: live SQL-cache entries after collect()"
+
+
+def test_prefix_scans_go_through_the_shared_kernel():
+    """Range-partitioned prefix scans have one owner,
+    hedera_spark/plans/range_scan.py, which keeps the partition-id
+    persist, the local window and the offsets join in one audited place.
+    key_skew_stats is the one exception: it needs per-partition moments,
+    not per-row ranks. A new hand-rolled copy anywhere else fails here."""
+    import ast
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "hedera_spark"
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "plans/range_scan.py":
+            continue
+        src = path.read_text()
+        allowed = set()
+        if rel == "operators/timeseries.py":
+            fn = next(
+                n
+                for n in ast.parse(src).body
+                if isinstance(n, ast.FunctionDef) and n.name == "key_skew_stats"
+            )
+            allowed = set(range(fn.lineno, fn.end_lineno + 1))
+        for i, line in enumerate(src.splitlines(), 1):
+            if re.search(r"spark_partition_id\(|repartitionByRange\(", line) and (
+                i not in allowed
+            ):
+                hits.append(f"hedera_spark/{rel}:{i}")
+    assert not hits, f"hand-rolled range scan, use plans/range_scan.py: {hits}"
