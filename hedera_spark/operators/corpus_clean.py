@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hedera_spark.functions.ngrams import ngram_sql
 from hedera_spark.sources.tables import load_table
 
 LINE_TOKENS = 8  # tokens per synthetic "line" segment (corpus has no \n)
@@ -136,20 +137,10 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     wins = (
         _doc_tokens(spark, sf_dir)
         .where(F.size("toks") >= SUBSTR_TOKENS)
-        .select(
+        .selectExpr(
             "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(
-                            F.lit(1), F.size("toks") - (SUBSTR_TOKENS - 1)
-                        ),
-                        lambda i: F.md5(
-                            F.concat_ws(" ", F.slice("toks", i, SUBSTR_TOKENS))
-                        ),
-                    )
-                )
-            ).alias("h"),
+            f"explode({ngram_sql('toks', SUBSTR_TOKENS, distinct=True, hashed=True)})"
+            " AS h",
         )
         .persist()
     )

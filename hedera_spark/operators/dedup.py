@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hedera_spark.functions.ngrams import ngram_sql
 from hedera_spark.plans.broadcast import broadcast_if_fits, plan_bytes
 from hedera_spark.sources.tables import load_table
 
@@ -38,6 +39,9 @@ JACCARD_THRESHOLD = 0.2
 SIMHASH_BITS = 60
 SIMHASH_CHUNKS = 4
 HAMMING_MAX = 8
+# the shingle set every near-dup operator compares: per-doc-distinct
+# word trigrams of the hoisted `toks` column
+_TRIGRAMS = ngram_sql("toks", 3, distinct=True)
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -53,32 +57,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "is_dup", (F.col("doc_id") != F.col("survivor_id")).cast("int")
         )
     )
-
-
-# per-doc-DISTINCT word-trigram shingle array expression over a
-# pre-split `toks` array column. Guard: Spark sequence(1, 0) is
-# DESCENDING, so short docs need an explicit empty array, not a
-# greatest() clamp.
-#
-# The split MUST be hoisted into a named `toks` column by the caller:
-# the former from-text form re-evaluated split(text) INSIDE the
-# transform lambda — Catalyst does not hoist loop-invariant lambda
-# subexpressions (the fingerprint `toks` lesson, text_analysis.py) —
-# so every doc paid O(tokens) full-text splits: an O(len^2) term per
-# document. Hoisting makes it one split per row (measured at sf0.1,
-# 54-token docs: warm shingle pass 0.36 -> 0.28 s, cold 2.6 -> 0.8 s;
-# the quadratic bites much harder on real 1k-token documents). Note
-# this hoists the TOKEN array, not the shingle array — the r4
-# experiment that materialized the shingle array in a separate
-# projection (2x slower, UnsafeRow round-trip of the wide array) is a
-# different change and stays rejected: the shingle expression itself
-# stays inline in each consumer's explode.
-_SHINGLE_ARR_TOKS = (
-    "CASE WHEN size(toks) >= 3 THEN"
-    " array_distinct(transform(sequence(1, size(toks) - 2),"
-    " i -> concat_ws(' ', slice(toks, i, 3))))"
-    " ELSE array() END"
-)
 
 
 def _docs_rebalanced(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -102,23 +80,22 @@ def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _docs_rebalanced(spark, sf_dir)
         .select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.expr(_SHINGLE_ARR_TOKS).alias("shingles"))
+        .selectExpr("doc_id", f"{_TRIGRAMS} AS shingles")
+    )
+
+
+def shingles_from(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) -> distinct (doc_id, shingle) word-trigram
+    shingles, exploded. Public so incremental dedup can shingle an
+    arbitrary snapshot (operators/delta.dedup_incremental)."""
+    return docs.select("doc_id", F.split("text", " ").alias("toks")).selectExpr(
+        "doc_id", f"explode({_TRIGRAMS}) AS shingle"
     )
 
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (doc_id, shingle) word-trigram shingles, exploded.
-    The SHINGLE expression stays INLINE in the explode (a separate
-    projection materializing the shingle array measured ~2x slower at
-    sf0.1 — the array round-trips through an UnsafeRow before the
-    explode), but the SPLIT is hoisted to a named `toks` column so it
-    runs once per row instead of once per transform-lambda element
-    (see _SHINGLE_ARR_TOKS)."""
-    return (
-        _docs_rebalanced(spark, sf_dir)
-        .select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.explode(F.expr(_SHINGLE_ARR_TOKS)).alias("shingle"))
-    )
+    """shingles_from over the rebalanced document scan."""
+    return shingles_from(_docs_rebalanced(spark, sf_dir))
 
 
 NGRAM_DF_CAP = 50  # drop shingles appearing in more than this many documents
@@ -337,28 +314,53 @@ def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_signatures_from(sh: DataFrame) -> DataFrame:
     """(doc_id, shingle) -> (doc_id, sig) with the md5-chunk family above.
     Public so incremental dedup can sign an arbitrary snapshot
-    (operators/delta.dedup_incremental)."""
-    # 16 INDEPENDENT hash chunks as min-aggregate columns (no row
-    # explode): partial aggregation shrinks the shuffle to |docs| x 16
-    # regardless of shingle volume.
-    md5s = [
-        F.md5(F.concat_ws("|", F.lit(j), F.col("shingle")))
-        for j in range(N_MINHASH // 4)
-    ]
-    seeded = sh.select(
-        "doc_id",
-        *[
-            F.substring(md5s[s // 4], (s % 4) * 8 + 1, 8).alias(f"h{s}")
-            for s in range(N_MINHASH)
-        ],
-    )
+    (operators/delta.dedup_incremental). The 16 hash chunks are min
+    aggregates, not an exploded row per hash, so partial aggregation
+    shrinks the shuffle to |docs| x 16 whatever the shingle volume.
+    Every expression is SQL text: one parse per projection instead of a
+    py4j call per column-function node."""
     return (
-        seeded.groupBy("doc_id")
-        .agg(*[F.min(f"h{s}").alias(f"m{s}") for s in range(N_MINHASH)])
-        .select(
+        sh.selectExpr(
             "doc_id",
-            F.array(*[F.col(f"m{s}") for s in range(N_MINHASH)]).alias("sig"),
+            *[
+                f"substring(md5(concat_ws('|', {s // 4}, shingle)),"
+                f" {s % 4 * 8 + 1}, 8) AS h{s}"
+                for s in range(N_MINHASH)
+            ],
         )
+        .groupBy("doc_id")
+        .agg(*[F.expr(f"min(h{s}) AS m{s}") for s in range(N_MINHASH)])
+        .selectExpr(
+            "doc_id", f"array({', '.join(f'm{s}' for s in range(N_MINHASH))}) AS sig"
+        )
+    )
+
+
+# matching-minhash count of a signature pair (sig_a, sig_b)
+SIG_MATCHES_SQL = (
+    "aggregate(zip_with(sig_a, sig_b, (x, y) -> CAST(x = y AS INT)), 0,"
+    " (acc, v) -> acc + v)"
+)
+
+
+# a candidate pair shares one of these keys
+LSH_BAND_KEYS = ["band", "band_hash"]
+
+
+def lsh_band_rows(sigs: DataFrame, n_bands: int, rows_per_band: int) -> DataFrame:
+    """(doc_id, sig) -> (doc_id, band, sig, band_hash): one row per LSH
+    band, band_hash = md5 of the band's `rows_per_band` minhashes joined
+    by '|'. Two documents are candidates when they share a (band,
+    band_hash); the signature rides along so the caller scores a pair
+    (SIG_MATCHES_SQL) right after its band self-join."""
+    return sigs.selectExpr(
+        "doc_id", f"explode(sequence(0, {n_bands - 1})) AS band", "sig"
+    ).selectExpr(
+        "doc_id",
+        "band",
+        "sig",
+        f"md5(concat_ws('|', slice(sig, band * {rows_per_band} + 1,"
+        f" {rows_per_band}))) AS band_hash",
     )
 
 
@@ -388,48 +390,23 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     under MEMORY_AND_DISK — 1.4 GB per executor at 10^10 docs on 1000
     executors, spilling not OOMing. The plan test pins both join sides
     reading the one InMemoryTableScan."""
-    sigs = _minhash_signatures(spark, sf_dir).persist()
-    bands = sigs.select(
-        "doc_id",
-        F.explode(F.expr(f"sequence(0, {N_BANDS - 1})")).alias("band"),
-        "sig",
-    ).select(
-        "doc_id",
-        "band",
-        "sig",
-        F.md5(
-            F.concat_ws(
-                "|",
-                F.expr(f"slice(sig, band * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND})"),
-            )
-        ).alias("band_hash"),
+    bands = lsh_band_rows(
+        _minhash_signatures(spark, sf_dir).persist(), N_BANDS, ROWS_PER_BAND
     )
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"), "band", "band_hash"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"), "band", "band_hash"
-    )
+    a = bands.selectExpr("doc_id AS doc_a", "sig AS sig_a", *LSH_BAND_KEYS)
+    b = bands.selectExpr("doc_id AS doc_b", "sig AS sig_b", *LSH_BAND_KEYS)
     return (
-        a.join(b, ["band", "band_hash"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select(
+        a.join(b, LSH_BAND_KEYS)
+        .where("doc_a < doc_b")
+        .selectExpr(
             "doc_a",
             "doc_b",
-            F.round(
-                F.aggregate(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                    F.lit(0),
-                    lambda acc, v: acc + v,
-                )
-                / F.lit(float(N_MINHASH)),
-                6,
-            ).alias("est_jaccard"),
+            f"round({SIG_MATCHES_SQL} / {N_MINHASH}D, 6) AS est_jaccard",
         )
         # a pair colliding in k bands appears k times with the SAME
         # est_jaccard; min() is just the dedup that keeps the plan narrow
         .groupBy("doc_a", "doc_b")
-        .agg(F.min("est_jaccard").alias("est_jaccard"))
+        .agg(F.expr("min(est_jaccard) AS est_jaccard"))
     )
 
 
@@ -733,51 +710,18 @@ def minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = _minhash_signatures(spark, sf_dir)
     frames = []
     for nb, rpb in BAND_CONFIGS:
-        bands = sigs.select(
-            "doc_id",
-            F.explode(F.expr(f"sequence(0, {nb - 1})")).alias("band"),
-            "sig",
-        ).select(
-            "doc_id",
-            "band",
-            "sig",
-            F.md5(
-                F.concat_ws(
-                    "|", F.expr(f"slice(sig, band * {rpb} + 1, {rpb})")
-                )
-            ).alias("band_hash"),
-        )
-        a = bands.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("sig").alias("sig_a"),
-            "band",
-            "band_hash",
-        )
-        b = bands.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("sig").alias("sig_b"),
-            "band",
-            "band_hash",
-        )
+        bands = lsh_band_rows(sigs, nb, rpb)
+        a = bands.selectExpr("doc_id AS doc_a", "sig AS sig_a", *LSH_BAND_KEYS)
+        b = bands.selectExpr("doc_id AS doc_b", "sig AS sig_b", *LSH_BAND_KEYS)
         # no merge hint here (unlike dedup_minhash): measured NEUTRAL to
         # slightly negative across the 4-config union — the per-config
         # frames are small enough that sort overhead eats the reuse win
         pairs = (
-            a.join(b, ["band", "band_hash"])
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select(
-                "doc_a",
-                "doc_b",
-                F.aggregate(
-                    F.zip_with(
-                        "sig_a", "sig_b", lambda x, y: (x == y).cast("int")
-                    ),
-                    F.lit(0),
-                    lambda acc, v: acc + v,
-                ).alias("matches"),
-            )
+            a.join(b, LSH_BAND_KEYS)
+            .where("doc_a < doc_b")
+            .selectExpr("doc_a", "doc_b", f"{SIG_MATCHES_SQL} AS matches")
             .groupBy("doc_a", "doc_b")
-            .agg(F.min("matches").alias("matches"))
+            .agg(F.expr("min(matches) AS matches"))
         )
         frames.append(
             pairs.agg(
@@ -1036,7 +980,7 @@ def bbit_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never all-pairs); the two signature joins broadcast that bounded
     pair frame, exactly minhash_error's plan shape."""
     pairs = dedup_minhash(spark, sf_dir).select("doc_a", "doc_b", "est_jaccard")
-    sigs = minhash_signatures_from(_shingles(spark, sf_dir))
+    sigs = _minhash_signatures(spark, sf_dir)
     j = (
         F.broadcast(pairs)
         .join(

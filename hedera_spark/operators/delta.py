@@ -128,69 +128,39 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     io/input/WikiRevisionPageInputFormat.java, against a prior dump —
     here at near-dup (MinHash) granularity rather than exact ids."""
     from hedera_spark.operators.dedup import (
-        _SHINGLE_ARR_TOKS,
+        LSH_BAND_KEYS,
         N_BANDS,
         N_MINHASH,
         ROWS_PER_BAND,
+        SIG_MATCHES_SQL,
+        lsh_band_rows,
         minhash_signatures_from,
+        shingles_from,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     v2 = _snapshot_v2(docs).repartition(spark.sparkContext.defaultParallelism)
-    # split hoisted to toks (the dedup._SHINGLE_ARR_TOKS lesson)
-    sh2 = v2.select("doc_id", F.split("text", " ").alias("toks")).select(
-        "doc_id", F.explode(F.expr(_SHINGLE_ARR_TOKS)).alias("shingle")
-    )
-    sigs = minhash_signatures_from(sh2)
+    sigs = minhash_signatures_from(shingles_from(v2))
     changed = corpus_delta(spark, sf_dir).where(
         F.col("change_type").isin("added", "modified")
     ).select("doc_id")
-    bands = sigs.select(
-        "doc_id",
-        F.explode(F.expr(f"sequence(0, {N_BANDS - 1})")).alias("band"),
-        "sig",
-    ).select(
-        "doc_id",
-        "band",
-        "sig",
-        F.md5(
-            F.concat_ws(
-                "|",
-                F.expr(f"slice(sig, band * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND})"),
-            )
-        ).alias("band_hash"),
-    )
-    flagged = bands.join(
+    flagged = lsh_band_rows(sigs, N_BANDS, ROWS_PER_BAND).join(
         changed.withColumn("is_new", F.lit(True)), "doc_id", "left"
     ).withColumn("is_new", F.coalesce("is_new", F.lit(False)))
-    a = flagged.where(F.col("is_new")).select(
-        F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "band_hash"
+    a = flagged.where("is_new").selectExpr(
+        "doc_id AS id_a", "sig AS sig_a", *LSH_BAND_KEYS
     )
-    b = flagged.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("is_new").alias("new_b"),
-        "band",
-        "band_hash",
-    )
-    pairs = a.join(b, ["band", "band_hash"]).where(F.col("id_a") != F.col("id_b"))
-    est = F.round(
-        F.aggregate(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
-        / F.lit(float(N_MINHASH)),
-        6,
+    b = flagged.selectExpr(
+        "doc_id AS id_b", "sig AS sig_b", "is_new AS new_b", *LSH_BAND_KEYS
     )
     return (
-        pairs.select(
-            F.least("id_a", "id_b").alias("doc_a"),
-            F.greatest("id_a", "id_b").alias("doc_b"),
-            est.alias("est_jaccard"),
-            F.when(F.col("new_b"), "new_new").otherwise("new_old").alias(
-                "pair_kind"
-            ),
+        a.join(b, LSH_BAND_KEYS)
+        .where("id_a != id_b")
+        .selectExpr(
+            "least(id_a, id_b) AS doc_a",
+            "greatest(id_a, id_b) AS doc_b",
+            f"round({SIG_MATCHES_SQL} / {N_MINHASH}D, 6) AS est_jaccard",
+            "CASE WHEN new_b THEN 'new_new' ELSE 'new_old' END AS pair_kind",
         )
         .groupBy("doc_a", "doc_b")
         .agg(

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hedera_spark.functions.ngrams import adjacent_pairs
 from hedera_spark.sources.tables import load_table
 
 KN_DISCOUNT = 0.75
@@ -49,25 +50,7 @@ def _kn_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    # split hoisted to a named toks column: the inline form evaluated
-    # split(text) twice per bigram position inside the transform lambda
-    # (Catalyst does not hoist loop-invariant lambda subexpressions) —
-    # O(len^2) per document (the dedup._SHINGLE_ARR_TOKS lesson)
-    return docs.select(
-        "doc_id", F.split("text", " ").alias("toks")
-    ).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(toks) >= 2 THEN"
-                " filter(transform(sequence(1, size(toks) - 1),"
-                " i -> struct(element_at(toks, i) AS w1,"
-                "             element_at(toks, i + 1) AS w2)),"
-                " p -> p.w1 != '' AND p.w2 != '')"
-                " ELSE array() END"
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.w1", "p.w2")
+    return adjacent_pairs(docs)
 
 
 def _p_kn():

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hedera_spark.functions.ngrams import ngram_sql
 from hedera_spark.sources.revisions import load_revisions, load_snapshots
 
 def _page_time() -> Window:
@@ -659,23 +660,12 @@ def rev_reverts(spark: SparkSession, sf_dir: str) -> DataFrame:
     key; then one partial-agg per candidate pair and one max_by argmax
     per reverting revision."""
     snaps = load_snapshots(spark, sf_dir)
-    # split hoisted to a named toks column: Catalyst does not hoist
-    # loop-invariant lambda subexpressions, so the inline form re-split
-    # the full text once per shingle position (O(len^2) per revision —
-    # the dedup._SHINGLE_ARR_TOKS lesson)
     sh = snaps.select(
         "page_id", "rev_seq", F.split("text", " ").alias("toks")
-    ).select(
+    ).selectExpr(
         "page_id",
         "rev_seq",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(toks) >= 3 THEN"
-                " array_distinct(transform(sequence(1, size(toks) - 2),"
-                " j -> md5(concat_ws(' ', slice(toks, j, 3)))))"
-                " ELSE array() END"
-            )
-        ).alias("s"),
+        f"explode({ngram_sql('toks', 3, distinct=True, hashed=True)}) AS s",
     )
     # page-local hot-shingle cut (the dedup_ngram_jaccard df-cap at page
     # grain): a shingle present in > REVERT_DF_CAP revisions of ONE page

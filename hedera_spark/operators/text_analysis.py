@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hedera_spark.functions.ngrams import adjacent_pairs, ngram_sql
 from hedera_spark.plans.range_scan import range_prefix_scan
 from hedera_spark.sources.tables import load_table
 
@@ -385,34 +386,15 @@ def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    # hash array as a NAMED column so it's computed once per row — inlining
-    # it into the window lambda would re-evaluate the whole array per
-    # window position (Catalyst does not hoist loop-invariant lambdas)
-    # same loop-invariant discipline as `hs` below: split once into a
-    # named `toks` column instead of re-evaluating split() three times
-    # inside one projection (Catalyst does not CSE subexpressions across
-    # a CASE's branches)
+    # the hash array is a NAMED column for the reason functions/ngrams.py
+    # gives for `toks`: inlined into the window lambda it would be
+    # recomputed per window position
     toks = docs.select("doc_id", F.split("text", " ").alias("toks"))
-    hashed = toks.select(
+    hashed = toks.selectExpr("doc_id", f"{ngram_sql('toks', 3, hashed=True)} AS hs")
+    return hashed.selectExpr(
         "doc_id",
-        # same short-doc guard as dedup._shingles: sequence(1, 0) descends
-        F.expr(
-            "CASE WHEN size(toks) >= 3 THEN"
-            " transform(sequence(1, size(toks) - 2),"
-            " j -> md5(concat_ws(' ', slice(toks, j, 3))))"
-            " ELSE array() END"
-        ).alias("hs"),
-    )
-    return hashed.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(hs) >= 1 THEN"
-                " array_distinct(transform(sequence(1, size(hs)),"
-                " i -> array_min(slice(hs, i, 4))))"
-                " ELSE array() END"
-            )
-        ).alias("fp"),
+        "explode(array_distinct(transform(hs,"
+        " (h, i) -> array_min(slice(hs, i + 1, 4))))) AS fp",
     )
 
 
@@ -502,14 +484,8 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size("t").cast("long").alias("n_tokens"),
         F.size(F.array_distinct("t")).cast("long").alias("n_distinct"),
-        F.expr(
-            "CASE WHEN size(t) >= 2 THEN transform(sequence(1, size(t) - 1),"
-            " i -> concat(t[i - 1], ' ', t[i])) ELSE array() END"
-        ).alias("bigrams"),
-        F.expr(
-            "CASE WHEN size(t) >= 3 THEN transform(sequence(1, size(t) - 2),"
-            " i -> concat_ws(' ', slice(t, i, 3))) ELSE array() END"
-        ).alias("trigrams"),
+        F.expr(ngram_sql("t", 2)).alias("bigrams"),
+        F.expr(ngram_sql("t", 3)).alias("trigrams"),
     )
     feat = grams.select(
         "doc_id",
@@ -715,6 +691,8 @@ def doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     their keys; V is a 1-row broadcast. Per-doc averaging is one
     partial-agg groupBy. No Python, no window."""
     docs = load_table(spark, sf_dir, "documents")
+    # pairs over the empty-filtered tokens ("a  b" pairs a with b), not
+    # functions/ngrams.adjacent_pairs, which drops a pair with an empty token
     bg = (
         docs.select(
             "doc_id",
@@ -1095,20 +1073,7 @@ def bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )  # rebalance off the single-row-group layout before the
     # CPU-dense per-row expansion (the text_repetition lesson)
-    # split hoisted to toks — the inline form paid two full splits per
-    # bigram position inside the lambda (dedup._SHINGLE_ARR_TOKS lesson)
-    bi = docs.select(F.split("text", " ").alias("toks")).select(
-        F.explode(
-            F.expr(
-                "CASE WHEN size(toks) >= 2 THEN"
-                " filter(transform(sequence(1, size(toks) - 1),"
-                " i -> struct(element_at(toks, i) AS w1,"
-                "             element_at(toks, i + 1) AS w2)),"
-                " p -> p.w1 != '' AND p.w2 != '')"
-                " ELSE array() END"
-            )
-        ).alias("p")
-    ).select("p.w1", "p.w2")
+    bi = adjacent_pairs(docs).select("w1", "w2")
     # persist both aggregates: each has MULTIPLE consumers that end in
     # independent broadcast builds, and a broadcast build cannot reuse
     # another subtree's exchange (no exchange to share — the r7 plan
@@ -1186,11 +1151,8 @@ def skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )  # rebalance off the single-row-group layout before the
     # CPU-dense per-row expansion (the text_repetition lesson)
-    # split hoisted to a named toks column: the inline form evaluated
-    # split(text) up to four times per generated pair inside the nested
-    # lambdas (Catalyst does not hoist loop-invariant lambda
-    # subexpressions — the dedup._SHINGLE_ARR_TOKS lesson), an O(len^2)
-    # term per document on top of the designed window expansion
+    # windowed pairs, not adjacent ones: written out here, with the
+    # split hoisted as functions/ngrams.py describes
     pairs = docs.select(F.split("text", " ").alias("toks")).select(
         F.explode(
             F.expr(
@@ -1887,14 +1849,12 @@ def split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-split distinct shingles are |shingle-vocab|-bounded
     aggs; the overlap is one equality join on the shingle key."""
-    from hedera_spark.operators.dedup import _SHINGLE_ARR_TOKS, _docs_rebalanced
+    from hedera_spark.operators.dedup import _docs_rebalanced
 
-    # split hoisted to toks (the dedup._SHINGLE_ARR_TOKS lesson)
     sh = (
         _docs_rebalanced(spark, sf_dir)
         .select(_split_col().alias("split"), F.split("text", " ").alias("toks"))
-        .select("split", F.explode(F.expr(_SHINGLE_ARR_TOKS)).alias("s"))
-        .select("split", "s")
+        .selectExpr("split", f"explode({ngram_sql('toks', 3, distinct=True)}) AS s")
         .distinct()
     )
     train = sh.where(F.col("split") == "train").select("s").withColumn(
@@ -2064,7 +2024,7 @@ def classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = docs.select(
         "doc_id",
         quality_score_col().alias("score"),
-        (F.col("lang") == "en").cast("long").alias("pos"),
+        F.when(F.col("lang") == "en", 1).otherwise(0).alias("pos"),
     )
     per_score = scored.groupBy("score").agg(
         F.sum("pos").alias("pos"),
@@ -2211,19 +2171,7 @@ def bigram_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    # split hoisted to toks (dedup._SHINGLE_ARR_TOKS lesson)
-    bi = docs.select(F.split("text", " ").alias("toks")).select(
-        F.explode(
-            F.expr(
-                "CASE WHEN size(toks) >= 2 THEN"
-                " filter(transform(sequence(1, size(toks) - 1),"
-                " i -> struct(element_at(toks, i) AS w1,"
-                "             element_at(toks, i + 1) AS w2)),"
-                " p -> p.w1 != '' AND p.w2 != '')"
-                " ELSE array() END"
-            )
-        ).alias("p")
-    ).select("p.w1", "p.w2")
+    bi = adjacent_pairs(docs).select("w1", "w2")
     cab_all = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_ab"))
     cab_all = cab_all.persist()
     m1 = cab_all.groupBy("w1").agg(F.sum("c_ab").alias("c_a1"))

@@ -56,17 +56,16 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake; this gates documents as they arrive. (In production you'd
     persist the one-row eval side; per-micro-batch re-evaluation is fine
     at test scale and the semantics are identical.)"""
-    from hedera_spark.operators.dedup import _SHINGLE_ARR_TOKS, EVAL_MOD
+    from hedera_spark.functions.ngrams import ngram_sql
+    from hedera_spark.operators.dedup import EVAL_MOD
     from hedera_spark.sources.tables import load_table
 
-    # split hoisted to toks on both sides (the dedup._SHINGLE_ARR_TOKS
-    # lesson): same values, one split per row instead of one per lambda
-    # element
+    trigrams = ngram_sql("toks", 3, distinct=True)
     eval_set = (
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % EVAL_MOD == 0)
         .select(F.split("text", " ").alias("toks"))
-        .select(F.explode(F.expr(_SHINGLE_ARR_TOKS)).alias("shingle"))
+        .selectExpr(f"explode({trigrams}) AS shingle")
         .agg(F.collect_set("shingle").alias("eval_set"))
         .withColumn("k", F.lit(1))
     )
@@ -75,13 +74,10 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.where(F.col("doc_id") % EVAL_MOD != 0)
         .withColumn("toks", F.split("text", " "))
         .join(F.broadcast(eval_set), "k")
-        .select(
+        .selectExpr(
             "doc_id",
-            F.size(
-                F.array_intersect(F.expr(_SHINGLE_ARR_TOKS), F.col("eval_set"))
-            )
-            .cast("long")
-            .alias("n_contaminated"),
+            f"CAST(size(array_intersect({trigrams}, eval_set)) AS BIGINT)"
+            " AS n_contaminated",
         )
         .where(F.col("n_contaminated") > 0)
     )

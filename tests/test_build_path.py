@@ -6,6 +6,8 @@ pays while its plan is being built, before any action runs.
 - k-means writes its centroid literal and argmin as SQL text (one call
   each, bit-exact doubles), so a cold build stays within a job budget
   and a round-trip ceiling.
+- dedup_minhash's signature and LSH bands are SQL text too, under a
+  round-trip ceiling of their own.
 - The session turns PySpark's per-call origin capture off; analysis
   errors must still name the offending column.
 """
@@ -183,6 +185,35 @@ def test_kmeans_build_round_trip_ceiling(spark, monkeypatch):
     kmeans_embeddings(spark, SF_DIR)
     monkeypatch.undo()
     assert 0 < calls[0] <= 1500
+
+
+def test_dedup_minhash_build_round_trip_ceiling(spark, monkeypatch):
+    """Driver→JVM round trips for a cold dedup_minhash build. Per-hash
+    `F` column chains for the signature cost 776 or more; the SQL-text
+    signature and band kernel about 240. Only the building thread is
+    counted: py4j's finalizer thread sends the deletes of earlier
+    builds' objects whenever it wakes, which is not this build's cost."""
+    import threading
+
+    from py4j import clientserver
+
+    from hedera_spark.operators.dedup import dedup_minhash
+    from hedera_spark.session import reset_session_state
+
+    reset_session_state(spark)
+    me = threading.get_ident()
+    calls = [0]
+    send = clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += threading.get_ident() == me
+        return send(self, command)
+
+    monkeypatch.setattr(clientserver.ClientServerConnection, "send_command", counting)
+    dedup_minhash(spark, SF_DIR)
+    monkeypatch.undo()
+    reset_session_state(spark)
+    assert 0 < calls[0] <= 400
 
 
 # --- origin capture off -----------------------------------------------

@@ -273,3 +273,51 @@ def test_prefix_scans_go_through_the_shared_kernel():
             ):
                 hits.append(f"hedera_spark/{rel}:{i}")
     assert not hits, f"hand-rolled range scan, use plans/range_scan.py: {hits}"
+
+
+# n-gram and MinHash-LSH code outside the two kernels, by file: the
+# kernel's own names, and the variants whose semantics differ on purpose
+_NGRAM_VARIANTS = {
+    "operators/dedup.py": {
+        "SIG_MATCHES_SQL",
+        "LSH_BAND_KEYS",
+        "lsh_band_rows",
+        "bbit_minhash_error",  # low-bit match of two signatures
+    },
+    "operators/text_analysis.py": {
+        "skipgram_pairs",  # windowed pairs, not adjacent ones
+        "doc_perplexity",  # pairs over the empty-filtered tokens
+    },
+    "operators/bpe.py": {"_pair_counts_from_els"},  # symbol pairs in a word
+}
+_NGRAM_OR_BAND_CODE = r"sequence\(1, size\(|band_hash|zip_with\(\W?sig_a"
+
+
+def test_ngrams_and_lsh_bands_go_through_the_shared_kernels():
+    """Word n-grams have one owner, hedera_spark/functions/ngrams.py, and
+    MinHash-LSH banding one, operators/dedup.py's lsh_band_rows and
+    SIG_MATCHES_SQL. The variants in _NGRAM_VARIANTS differ on purpose
+    and are allowed by name; registry.py is skipped, because its DuckDB
+    oracles state each algorithm independently. A new hand-rolled copy
+    anywhere else fails here."""
+    import ast
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "hedera_spark"
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel in ("functions/ngrams.py", "registry.py"):
+            continue
+        src = path.read_text()
+        names = _NGRAM_VARIANTS.get(rel, set())
+        allowed = set()
+        for n in ast.parse(src).body:
+            targets = [getattr(t, "id", None) for t in getattr(n, "targets", [])]
+            if getattr(n, "name", None) in names or names.intersection(targets):
+                allowed.update(range(n.lineno, n.end_lineno + 1))
+        for i, line in enumerate(src.splitlines(), 1):
+            if i not in allowed and re.search(_NGRAM_OR_BAND_CODE, line):
+                hits.append(f"hedera_spark/{rel}:{i}")
+    assert not hits, f"hand-rolled n-gram or LSH band code, use the kernels: {hits}"

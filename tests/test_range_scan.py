@@ -1,6 +1,7 @@
 """The range-partitioned prefix scan (plans/range_scan.py) against the
 single-task window it replaces: identical ranks and running sums for any
-partition count, and operators built on it keep null groups."""
+partition count, and operators built on it keep null groups and null-keyed
+rows."""
 
 from __future__ import annotations
 
@@ -90,21 +91,40 @@ def null_keyed_sf(tmp_path):
     return str(tmp_path)
 
 
+def _duck_documents(sf_dir: str, sql: str):
+    """`sql` run by DuckDB over the documents table under `sf_dir`."""
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/documents.parquet')"
+        )
+        return con.execute(sql).df()
+    finally:
+        con.close()
+
+
 @pytest.mark.parametrize("name", ["pack_sequences", "score_quantile_norm"])
 def test_null_group_keys_keep_their_rows(spark, null_keyed_sf, name):
     """A null lang (source) is a group of its own in the oracle's
     PARTITION BY; the scan's offsets join must not drop those rows."""
-    import duckdb
-
     from hedera_spark.registry import ORACLE, QUERIES
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{null_keyed_sf}/documents.parquet')"
-    )
-    want = con.execute(ORACLE[name]).df()
-    con.close()
+    want = _duck_documents(null_keyed_sf, ORACLE[name])
     got = QUERIES[name](spark, null_keyed_sf).toPandas()
     assert want.isna().any().any(), "the corpus should carry null keys"
     assert_frames_match(got, want, name)
+
+
+def test_classifier_auc_counts_null_lang_as_negative(spark, null_keyed_sf):
+    """A null lang is not English: the oracle's CASE WHEN lang = 'en'
+    counts those documents as negatives, and so must the scan's input."""
+    from hedera_spark.registry import ORACLE, QUERIES
+
+    want = _duck_documents(null_keyed_sf, ORACLE["classifier_auc"])
+    n_docs = _duck_documents(null_keyed_sf, "SELECT count(*) AS n FROM documents").n[0]
+    got = QUERIES["classifier_auc"](spark, null_keyed_sf).toPandas()
+    assert want.n_pos[0] + want.n_neg[0] == n_docs
+    assert_frames_match(got, want, "classifier_auc")

@@ -5,8 +5,10 @@ JSON line {"total_sec": ..., "queries": {name: sec}, "slowest": [...]}.
 Not the driver bench (bench.py stays the stable headline contract) —
 this is the perf-tracking companion: a per-operator wall-clock table to
 diff across rounds so a regression in ANY operator is visible, not just
-the 23 headline ones. Cache is cleared between queries (operators that
-persist intermediates must not serialize through one storage pool).
+the 23 headline ones. `reset_session_state` runs between queries, as in
+bench.py: operators that persist intermediates must not serialize
+through one storage pool, and a model trained by an earlier entry must
+not turn a later entry's timing into scoring only.
 """
 
 from __future__ import annotations
@@ -24,14 +26,14 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from hedera_spark.registry import QUERIES
-    from hedera_spark.session import get_spark
+    from hedera_spark.session import get_spark, reset_session_state
 
     spark = get_spark("hedera_spark-bench-full")
     spark.sparkContext.setLogLevel("ERROR")
 
     times: dict[str, float] = {}
     for name, fn in sorted(QUERIES.items()):
-        spark.catalog.clearCache()
+        reset_session_state(spark)
         t0 = time.perf_counter()
         try:
             n = len(fn(spark, sf_dir).collect())

@@ -35,6 +35,7 @@ SF = args[0] if args else "/root/testdata/sf0.01"
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
 
+from hedera_spark.session import reset_session_state
 from tests.oracle_compare import assert_frames_match
 qs, os_ = e.queries(), e.oracle_sql()
 ok, fail = 0, 0
@@ -45,9 +46,9 @@ for name, fn in sorted(qs.items()):
         # local mode shares ONE heap between driver and executors: frames
         # persisted by iterative operators (kcore/pagerank/kmeans return
         # cached lineage) accumulate across a 150+-query sweep and OOM the
-        # session around the 90th query — drop them between queries, same
-        # as bench.py's isolation
-        spark.catalog.clearCache()
+        # session around the 90th query — drop them, and the trained
+        # models, between queries, same as bench.py's isolation
+        reset_session_state(spark)
         spdf = fn(spark, SF).toPandas()
         if name in os_:
             opdf = con.execute(os_[name]).df()
