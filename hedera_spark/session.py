@@ -52,8 +52,47 @@ def get_spark(app_name: str = "hedera_spark", shuffle_partitions: int | None = N
         # offending column; only the Python line is dropped. A static
         # conf: it applies to sessions this builder creates.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Without the native Hadoop library (pip-installed PySpark ships
+        # none) the default FileContext-based checkpoint manager runs
+        # `readlink` in a forked shell on every rename of an offset,
+        # commit, metadata or source-log file (ChecksumFs.renameInternal
+        # -> FileUtil.readLink): 208 of the ~355 processes a lake_ingest
+        # pass started on a 4-core VM, and most of each micro-batch's
+        # ~34 ms walCommit / commitOffsets / latestOffset. The
+        # FileSystem-based manager renames with fs.rename (File.renameTo
+        # on file: paths) and forks nothing. HDFSMetadataLog (offsets,
+        # commits, source logs) and StreamMetadata write with
+        # overwriteIfPossible=false, for which this manager refuses an
+        # existing target (exists check, then rename) as the FileContext
+        # one does on file: paths; on HDFS the rename itself also refuses
+        # an existing target. A runtime SQL conf.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # Hadoop's local FileSystem writes a `.crc` sidecar next to every file
+    # it creates, and (without the native library) chmods the file and
+    # the sidecar in a forked shell each: checkpoint temp files, parquet
+    # part files, `_SUCCESS`. Checksum writing is switched off on the
+    # process's cached file: FileSystem, the instance every file: path
+    # resolves to on the driver and in local-mode tasks: one chmod per
+    # file instead of two, ~146 -> ~104 process starts per lake_ingest
+    # pass. What is given up: the sidecars of files written from here
+    # on, so Hadoop no longer detects corruption of those local files on
+    # read (parquet pages still carry their own CRC). Existing sidecars
+    # are still verified, and a rewrite or rename over a file drops its
+    # stale sidecar. fs.file.impl is not swapped for RawLocalFileSystem:
+    # FileSystem.getLocal (sc.textFile, Hadoop's LocalDirAllocator)
+    # casts the file: FileSystem to LocalFileSystem and would fail. HDFS
+    # and object-store paths are untouched.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI.create("file:///"), spark.sparkContext._jsc.hadoopConfiguration()
+    ).setWriteChecksum(False)
+    return spark
 
 
 def reset_session_state(spark: SparkSession) -> None:
@@ -81,12 +120,13 @@ def reset_session_state(spark: SparkSession) -> None:
     long-lived session should call it between independent queries.
 
     One process cache deliberately survives a reset: the parquet schemas
-    `sources.tables.load_table` inferred (`tables._SCHEMA_CACHE`). A
-    cached schema is a pure function of its key, the table path plus the
-    size/mtime fingerprint of its files, so it can never go stale or
-    change a plan; a rewrite in place changes the key and re-infers.
-    Clearing it would only put one footer-reading Spark job back into
-    every table load of the next query.
+    `sources.tables.load_table` and `streaming.source.probe_schema`
+    inferred (`tables._SCHEMA_CACHE`). A cached schema is a pure function
+    of its key, the path plus the size/mtime fingerprint of its files,
+    so it can never go stale or change a plan; a rewrite in place
+    changes the key and re-infers. Clearing it would only put one
+    footer-reading Spark job back into every table load and stream
+    start of the next query.
     """
     spark.catalog.clearCache()
     from hedera_spark.operators import importance, kmeans

@@ -33,13 +33,15 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 # The schema `spark.read.parquet` inferred for each table, keyed by
-# table_state_key (path plus file size/mtime fingerprint). Inference reads
-# the parquet footers in a Spark job on every read; a reread with the
-# cached schema fires none. A rewrite in place changes the fingerprint and
-# so re-infers. A key that could not be stat'ed (path-only, length 1) is
-# never cached: nothing would notice the data changing under it. The
-# inferred schema also depends on the reader confs, which load_table pins
-# itself (nanosAsLong) before every read.
+# table_state_key (path plus file size/mtime fingerprint), and for each
+# stream directory streaming.source.probe_schema probed, keyed by
+# (path_state_key, recursive). Inference reads the parquet footers in a
+# Spark job on every read; a reread with the cached schema fires none. A
+# rewrite in place, or a file landing in a stream directory, changes the
+# fingerprint and so re-infers. A key that could not be stat'ed
+# (path-only, length 1) is never cached: nothing would notice the data
+# changing under it. The inferred schema also depends on the reader
+# confs, which both readers pin (nanosAsLong) before every read.
 _SCHEMA_CACHE: dict[tuple, T.StructType] = {}
 
 
@@ -85,12 +87,19 @@ def table_state_key(sf_dir: str, name: str) -> tuple:
     fingerprint). The in-process model stores (kmeans centroids, the LR
     quality classifier) must retrain when the data under a path changes
     within one session — a path-only key silently serves a stale model
-    after an in-place rewrite. File (relpath, size, mtime_ns) triples are
-    a metadata-only fingerprint (no data scan, so checking the key costs
-    microseconds); on a store where the driver cannot stat (HDFS/S3
-    paths), fall back to path-only keying — same contract as before,
-    documented as path->data immutability for the process lifetime."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    after an in-place rewrite. See path_state_key for the fingerprint."""
+    return path_state_key(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def path_state_key(path: str) -> tuple:
+    """(path, file metadata fingerprint) of a parquet file or directory.
+    File (relpath, size, mtime_ns) triples are a metadata-only
+    fingerprint (no data scan, so checking the key costs microseconds);
+    a file added, removed or rewritten under a directory changes it. On
+    a store where the driver cannot stat (HDFS/S3 paths), fall back to
+    path-only keying (length 1): the model registries then assume
+    path->data immutability for the process lifetime; the schema caches
+    never store under such a key."""
     try:
         if os.path.isdir(path):
             parts = []

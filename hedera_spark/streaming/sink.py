@@ -75,31 +75,34 @@ def stream_write_compacted(
     recursive: bool = True,
 ) -> StreamingQuery:
     """stream_write_partitioned with the small-files problem solved at
-    write time: each micro-batch is repartitioned to
-    ceil(batch_rows / target_rows_per_file) tasks before the dynamic
-    partition overwrite, so a date partition lands as a few
-    right-sized parquet files instead of one shard per shuffle
+    write time: each micro-batch is rebalanced on `event_date` before
+    the dynamic partition overwrite, and the writer rolls a file over
+    every `target_rows_per_file` rows, so a date partition lands as a
+    few right-sized parquet files instead of one shard per shuffle
     partition (32 shuffle partitions x 365 days = 11k tiny files —
     the classic streaming-lake pathology; a 100 TB-lake reader wants
-    ~128 MB-1 GB files). Batch-size counting is one cheap action per
-    micro-batch (the standard foreachBatch compaction idiom); the
-    idempotence story is unchanged — replays rewrite exactly the
-    partitions they carry."""
-    import math
+    ~128 MB-1 GB files).
 
+    Why a rebalance and not a count: sizing a round-robin repartition
+    from `batch_df.count()` scans every micro-batch twice (the count
+    job, then the write). The rebalance hash-partitions on the date,
+    so all of a date's rows meet in one task, which writes
+    ceil(rows_date / target_rows_per_file) files (the maxRecordsPerFile
+    roll-over) in one scan. AQE still splits a date whose shuffle
+    output exceeds the advisory partition size (64 MB by default) into
+    parallel tasks over ranges of its map tasks, each writing its own
+    files, so a huge single-day batch is not funnelled through one core. The idempotence story is
+    unchanged — replays rewrite exactly the partitions they carry."""
     ev = stream_events_dir(spark, src_dir, recursive=recursive).withColumn(
         "event_date", F.to_date("ts")
     )
 
     def _write_batch(batch_df, batch_id: int) -> None:
-        n = batch_df.count()
-        if n == 0:
-            return
-        n_files = max(1, math.ceil(n / target_rows_per_file))
         (
-            batch_df.repartition(n_files)
+            batch_df.hint("rebalance", "event_date")
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
+            .option("maxRecordsPerFile", target_rows_per_file)
             .partitionBy("event_date")
             .parquet(out_dir)
         )

@@ -5,8 +5,9 @@ testdata regenerations: nanosecond timestamps, which Spark (under
 ``spark.sql.legacy.parquet.nanosAsLong``) surfaces as LongType nanos,
 and plain ``timestamp[us]``, which surfaces as TIMESTAMP_NTZ. A file
 stream must pin its schema up front (streams cannot infer), so we probe
-the parquet footer with a zero-job batch-read and branch on the observed
-`ts` type — the same conditional normalization `load_table`
+the parquet footers with a batch read (one footer-reading Spark job,
+then cached per directory fingerprint) and branch on the observed `ts`
+type — the same conditional normalization `load_table`
 (hedera_spark/sources/tables.py) applies on the batch side. Keeping both
 paths in this one helper guarantees stream and batch agree on the
 event-time column no matter which encoding the current testdata carries.
@@ -17,9 +18,10 @@ disk become typed records" for its MapReduce jobs; this module is that
 seam for the streaming side, with Spark's parquet reader doing the
 decoding and only the ts-encoding branch left to us.
 
-Scale: the probe reads footers only (no data pages); the stream itself
-is a standard file source — checkpointed offsets, per-file splits,
-predicate pushdown on the pinned schema. Nothing here holds state.
+Scale: the probe reads footers only (no data pages), once per state of
+the probed path; the stream itself is a standard file source —
+checkpointed offsets, per-file splits, predicate pushdown on the pinned
+schema. The only state held here is the probed-schema cache.
 """
 
 from __future__ import annotations
@@ -29,6 +31,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from hedera_spark.sources.tables import _SCHEMA_CACHE, path_state_key
 
 
 def normalize_ts(df: DataFrame) -> DataFrame:
@@ -51,16 +55,29 @@ def normalize_ts(df: DataFrame) -> DataFrame:
 def probe_schema(
     spark: SparkSession, path: str, recursive: bool = False
 ) -> T.StructType:
-    """Learn the on-disk schema from the parquet footer via a batch read
-    (footer-only; no data pages are scanned). Sets the legacy nanos conf
-    first so a nanos-encoded file surfaces as LongType instead of
-    erroring, and pins the session to UTC like the batch loader."""
+    """Learn the on-disk schema from the parquet footers via a batch read
+    (footer-only; no data pages are scanned, but inference is one Spark
+    job). Sets the legacy nanos conf first so a nanos-encoded file
+    surfaces as LongType instead of erroring, and pins the session to
+    UTC like the batch loader.
+
+    The schema is kept in `tables._SCHEMA_CACHE` under (path_state_key,
+    recursive), so restarting a stream over an unchanged directory
+    fires no job, while a directory that gained, lost or rewrote a file
+    is probed again. A path that cannot be stat'ed is never cached."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    reader = spark.read
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    return reader.parquet(path).schema
+    state = path_state_key(path)
+    key = (state, recursive)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        reader = spark.read
+        if recursive:
+            reader = reader.option("recursiveFileLookup", "true")
+        schema = reader.parquet(path).schema
+        if len(state) > 1:
+            _SCHEMA_CACHE[key] = schema
+    return schema
 
 
 def stream_events_dir(

@@ -2,7 +2,8 @@
 pays while its plan is being built, before any action runs.
 
 - `load_table` caches each parquet schema it inferred, so a reread fires
-  no footer-reading job, and a rewrite in place still re-infers.
+  no footer-reading job, and a rewrite in place still re-infers. The
+  stream-start schema probe shares that cache.
 - k-means writes its centroid literal and argmin as SQL text (one call
   each, bit-exact doubles), so a cold build stays within a job budget
   and a round-trip ceiling.
@@ -100,6 +101,57 @@ def test_unfingerprinted_path_is_never_cached(spark, tmp_path, monkeypatch):
     assert tables._SCHEMA_CACHE == before
 
 
+# --- schema probe at stream start ---------------------------------------
+
+
+def _write_events(path, with_extra: bool) -> None:
+    cols = {
+        "event_id": pa.array([1, 2], type=pa.int64()),
+        "ts": pa.array([1_700_000_000_000_000, 1_700_000_060_000_000], type=pa.timestamp("us")),
+    }
+    if with_extra:
+        cols["extra"] = pa.array(["a", "b"])
+    pq.write_table(pa.table(cols), path)
+
+
+def test_repeated_stream_start_fires_no_probe_job(spark, tmp_path):
+    from hedera_spark.streaming.source import stream_events_dir
+
+    _write_events(tmp_path / "part-0.parquet", with_extra=False)
+    assert _jobs_fired(spark, lambda: stream_events_dir(spark, str(tmp_path))) >= 1
+    assert _jobs_fired(spark, lambda: stream_events_dir(spark, str(tmp_path))) == 0
+    # recursive listing can infer differently: a key of its own
+    assert _jobs_fired(spark, lambda: stream_events_dir(spark, str(tmp_path), recursive=True)) >= 1
+
+
+def test_stream_probe_rereads_changed_dir(spark, tmp_path):
+    """A file rewritten in place, or a file landing in the directory,
+    changes the fingerprint: the schema is probed again."""
+    from hedera_spark.streaming.source import stream_events_dir
+
+    path = tmp_path / "part-0.parquet"
+    _write_events(path, with_extra=False)
+    assert stream_events_dir(spark, str(tmp_path)).columns == ["event_id", "ts"]
+    _write_events(path, with_extra=True)
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    assert stream_events_dir(spark, str(tmp_path)).columns == ["event_id", "ts", "extra"]
+    _write_events(tmp_path / "part-1.parquet", with_extra=True)
+    assert _jobs_fired(spark, lambda: stream_events_dir(spark, str(tmp_path))) >= 1
+
+
+def test_unfingerprinted_stream_probe_is_never_cached(spark, tmp_path, monkeypatch):
+    from hedera_spark.sources import tables
+    from hedera_spark.streaming import source
+
+    _write_events(tmp_path / "part-0.parquet", with_extra=False)
+    monkeypatch.setattr(source, "path_state_key", lambda path: (path,))
+    before = dict(tables._SCHEMA_CACHE)
+    for _ in range(2):
+        assert _jobs_fired(spark, lambda: source.stream_events_dir(spark, str(tmp_path))) >= 1
+    assert tables._SCHEMA_CACHE == before
+
+
 # --- k-means build path ------------------------------------------------
 
 _AWKWARD = [
@@ -167,18 +219,22 @@ def test_kmeans_build_job_budget(spark):
 
 def test_kmeans_build_round_trip_ceiling(spark, monkeypatch):
     """Driver→JVM round trips for a cold build. Element-wise `F.lit`
-    centroids cost ~14k; the SQL-text literals about 500."""
+    centroids cost ~14k; the SQL-text literals about 500. Only the
+    building thread is counted, as for dedup_minhash below."""
+    import threading
+
     from py4j import clientserver
 
     from hedera_spark.operators.kmeans import kmeans_embeddings
     from hedera_spark.session import reset_session_state
 
     reset_session_state(spark)
+    me = threading.get_ident()
     calls = [0]
     send = clientserver.ClientServerConnection.send_command
 
     def counting(self, command):
-        calls[0] += 1
+        calls[0] += threading.get_ident() == me
         return send(self, command)
 
     monkeypatch.setattr(clientserver.ClientServerConnection, "send_command", counting)

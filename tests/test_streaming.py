@@ -1934,3 +1934,83 @@ def test_stream_gopher_gate_equals_batch(spark):
         for r in gopher_quality_gate(spark, SF_DIR).collect()
     }
     assert got == want and len(want) > 0
+
+
+# --- lake path overhead: one scan per micro-batch, no sidecars ---------
+
+
+def test_stream_write_compacted_reads_each_event_once(spark, tmp_path):
+    """The compacted sink sizes its files without a per-batch count, so
+    the source reads every event exactly once: the rows the progress
+    reports sum to the events landed (a count-then-write sink reads
+    each micro-batch twice and reports 2x)."""
+    from hedera_spark.streaming.sink import stream_write_compacted
+
+    src, chunks, ev = _chunked_src(spark, tmp_path, n_chunks=3)
+    out = tmp_path / "lake"
+    q = stream_write_compacted(spark, str(src), str(out), str(tmp_path / "ck"))
+    assert q.awaitTermination(180)
+    n = ev.count()
+    assert len(q.recentProgress) == len(chunks)
+    assert sum(p.numInputRows for p in q.recentProgress) == n
+    lake = spark.read.parquet(str(out))
+    assert lake.count() == n
+    assert lake.select("event_id").distinct().count() == n
+
+
+def test_session_checkpoints_through_filesystem_manager(spark):
+    """get_spark pins the FileSystem-based checkpoint manager, whose
+    rename forks no `readlink` shell on the local file system."""
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_lake_and_checkpoint_hold_no_crc_files(spark, tmp_path):
+    """A session from get_spark writes no Hadoop `.crc` sidecars on
+    local paths: not beside the lake's parquet files and `_SUCCESS`,
+    not beside the checkpoint's offsets, commits and source log."""
+    from hedera_spark.streaming.sink import stream_write_partitioned
+
+    src, chunks, ev = _chunked_src(spark, tmp_path, n_chunks=2)
+    out, ckpt = tmp_path / "lake", tmp_path / "ckpt"
+    q = stream_write_partitioned(spark, str(src), str(out), str(ckpt))
+    assert q.awaitTermination(180)
+    assert spark.read.parquet(str(out)).count() == ev.count()
+    assert (ckpt / "offsets" / "0").is_file() and (ckpt / "commits" / "0").is_file()
+    assert [str(p) for d in (out, ckpt) for p in d.rglob("*.crc")] == []
+
+
+def test_local_filesystem_is_still_a_localfilesystem(spark, tmp_path):
+    """The sidecars are switched off on the local FileSystem, not by
+    swapping in RawLocalFileSystem: FileSystem.getLocal, which
+    sc.textFile calls, casts to LocalFileSystem."""
+    (tmp_path / "a.txt").write_text("x\ny\n")
+    assert spark.sparkContext.textFile(str(tmp_path / "a.txt")).count() == 2
+
+
+def test_stream_write_compacted_resumes_from_checkpoint(spark, tmp_path):
+    """Stop after the first chunks, land the last one, restart on the SAME
+    checkpoint: the restart reads only the new file, and the lake holds
+    every event exactly once."""
+    import shutil
+
+    from hedera_spark.streaming.sink import stream_write_compacted
+
+    src, chunks, ev = _chunked_src(spark, tmp_path, n_chunks=3)
+    held = tmp_path / "held"
+    shutil.move(str(src / f"chunk={len(chunks) - 1}"), str(held))
+    out, ckpt = str(tmp_path / "lake"), str(tmp_path / "ckpt")
+    q = stream_write_compacted(spark, str(src), out, ckpt)
+    assert q.awaitTermination(180)
+    n_first = spark.read.parquet(out).count()
+    assert 0 < n_first < ev.count()
+
+    shutil.move(str(held), str(src / f"chunk={len(chunks) - 1}"))
+    q = stream_write_compacted(spark, str(src), out, ckpt)
+    assert q.awaitTermination(180)
+    assert sum(p.numInputRows for p in q.recentProgress) == ev.count() - n_first
+    lake = spark.read.parquet(out)
+    assert lake.count() == ev.count()
+    assert lake.select("event_id").distinct().count() == ev.count()
