@@ -29,9 +29,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     single-execution plans. A LONG-LIVED session running many queries
     should call ``hedera_spark.session.reset_session_state(spark)``
     between independent queries (bench.py and the test suite do): it
-    releases those caches and the in-process model registries, keeping
-    later plans clean and preventing stale cached reads after an
-    in-place rewrite of the parquet inputs.
+    releases those caches and drops the trained models from
+    ``hedera_spark.sources.tables.derived``, keeping later plans clean
+    and preventing stale cached reads after an in-place rewrite of the
+    parquet inputs. That store keys everything by the inputs' file
+    state; on paths the driver cannot stat it stores nothing.
     ``tests/test_plans.py::test_reset_session_state_clears_all_persisted_frames``
     pins the contract."""
     from hedera_spark.registry import QUERIES

@@ -110,9 +110,6 @@ HOT_SET_ARRAY_ROUTE_MAX = 1024
 # array route's worst case is bounded by the input itself, and the
 # probe's extra job would cost more than it can save (see _pair_stats).
 HOT_ROUTE_PROBE_MIN_BYTES = 2 * 1024 * 1024
-# Ceiling on the planner's size estimate of the cold (df <= cap)
-# vocabulary for the cold route's broadcast join (plans/broadcast.py).
-COLD_VOCAB_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -229,7 +226,7 @@ def _pair_stats(arrs: DataFrame, df_cap: int = NGRAM_DF_CAP) -> DataFrame:
         w_doc = Window.partitionBy("doc_id")
         kept = (
             arrs.select("doc_id", F.explode("shingles").alias("shingle"))
-            .join(broadcast_if_fits(cold, COLD_VOCAB_BROADCAST_MAX_BYTES), "shingle")
+            .join(broadcast_if_fits(cold), "shingle")
             .select(
                 "doc_id",
                 F.count(F.lit(1)).over(w_doc).cast("long").alias("n"),

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hedera_spark.functions.literals import double_array
-from hedera_spark.sources.tables import load_table, table_state_key
+from hedera_spark.sources.tables import derived, load_table, table_state_key
 
 DSIR_BUCKETS = 512
 DSIR_TARGET_LANG = "en"
@@ -135,17 +135,6 @@ LR_ITERATIONS = 3
 LR_RATE = 4.0  # step size; features are occupancy-normalized so |grad| ~ 1e-2
 
 
-# In-process model registry (the kmeans._CENTROID_REGISTRY pattern):
-# the GD-trained weight vector is a deterministic pure function of the
-# corpus (fixed init/iterations/rate, every fold ordered, 6-dp
-# quantized), so the five composing dials (calibration, AUC, gains,
-# kappa, ppl-correlation) score with the published model instead of
-# retraining — a hit can never change a result. Keyed by (path,
-# file-metadata fingerprint) via table_state_key so an in-place rewrite
-# of documents within one session retrains instead of serving stale.
-_LR_REGISTRY: dict[tuple, list] = {}
-
-
 def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained quality filter — the third quality recipe next to the
     heuristic score (text_quality) and importance weights (dsir): a
@@ -214,9 +203,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("p")
         )
 
-    model_key = table_state_key(sf_dir, "documents")
-    w = _LR_REGISTRY.get(model_key)
-    if w is None:
+    def train() -> list:
         w = [0.0] * (DSIR_BUCKETS + 1)  # last entry = bias
         # the bias rides the SAME gradient aggregate as a synthetic bucket
         # -1 with x = 1 (r*1.0 is exact, the doc_id-sorted fold is
@@ -250,7 +237,15 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             for row in grads:
                 b = int(row["bucket"])
                 w[b] = round(w[b] - LR_RATE * round(row["g"] / n_docs, 6), 6)
-        _LR_REGISTRY[model_key] = w
+        return w
+
+    # the weights are a deterministic pure function of the corpus (fixed
+    # init/iterations/rate, every fold ordered, 6-dp quantized), so the
+    # composing dials (calibration, AUC, gains, kappa, ppl-correlation)
+    # score with the stored model until the next reset_session_state
+    w = derived(
+        table_state_key(sf_dir, "documents"), "lr_weights", (LR_ITERATIONS, LR_RATE), train
+    )
 
     # per_doc/labels stay PERSISTED through the return: the frame handed
     # back is lazy, and the caller's terminal action is one more scoring

@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 
 from hedera_spark.functions.literals import double_array_sql
 from hedera_spark.operators.similarity import _dot
-from hedera_spark.sources.tables import load_table, table_state_key
+from hedera_spark.sources.tables import derived, load_table, table_state_key
 
 KMEANS_K = 8
 KMEANS_ITERATIONS = 3
@@ -111,42 +111,43 @@ def _empty_assign(emb: DataFrame) -> DataFrame:
     ).where(F.lit(False))
 
 
-# In-process model registry: the trained centroids are a DETERMINISTIC
-# pure function of the corpus (fixed init, fixed iterations, rounded
-# means), so composing operators (dedup_semantic, kmeans_silhouette,
-# coreset comparisons) reuse the published model instead of re-running
-# Lloyd's — exactly what a production pipeline does with a model store.
-# Keyed by (path, file-metadata fingerprint) via table_state_key: an
-# in-place rewrite of the table within one session changes the key and
-# retrains instead of serving a stale model; identical input always
-# yields identical centroids, so a hit can never change a result.
-_CENTROID_REGISTRY: dict[tuple, list] = {}
-
-
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means (K=8, 3 fixed iterations, init = the K smallest
     vec_ids' embeddings; cluster labels are the init vec_ids). Output:
     (vec_id, cluster_id, dist2) — the final assignment table, i.e. the
-    trained IVF cell map."""
+    trained IVF cell map.
+
+    The centroids are a deterministic pure function of the corpus (fixed
+    init, fixed iterations, rounded means), so they are kept in the
+    `tables.derived` store until the next reset_session_state: composing
+    operators (dedup_semantic, kmeans_silhouette, coreset comparisons)
+    score with the trained model instead of re-running Lloyd's."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
     )
-    model_key = table_state_key(sf_dir, "embeddings")
-    if model_key in _CENTROID_REGISTRY:
-        cent_rows = _CENTROID_REGISTRY[model_key]
-        if not cent_rows:
-            return _empty_assign(emb).select("vec_id", "cluster_id", "dist2")
-        return _assign(emb, cent_rows).select("vec_id", "cluster_id", "dist2")
-    # bounded driver pulls throughout the loop: K rows, then K·1 rows of
-    # (cid, 64-double centroid) per iteration — never corpus-sized
+    cent_rows = derived(
+        table_state_key(sf_dir, "embeddings"),
+        "kmeans_centroids",
+        (KMEANS_K, KMEANS_ITERATIONS),
+        lambda: _train(emb),
+    )
+    if not cent_rows:
+        return _empty_assign(emb).select("vec_id", "cluster_id", "dist2")
+    # final assignment under the trained centroids — map-only plan
+    return _assign(emb, cent_rows).select("vec_id", "cluster_id", "dist2")
+
+
+def _train(emb: DataFrame) -> list:
+    """The trained (cid, centroid) rows, [] for an empty corpus. Bounded
+    driver pulls throughout the loop: K rows, then K·1 rows of (cid,
+    64-double centroid) per iteration — never corpus-sized."""
     cent_rows = [
         (r["vec_id"], r["emb"])
         for r in emb.orderBy("vec_id").limit(KMEANS_K).collect()
     ]
     if not cent_rows:
-        _CENTROID_REGISTRY[model_key] = []
-        return _empty_assign(emb).select("vec_id", "cluster_id", "dist2")
+        return []
     # one aggregate per coordinate, grouped on the cluster alone: one
     # partial-agg shuffle of at most K rows per partition per iteration
     means = F.expr(
@@ -162,9 +163,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
         cent_rows = sorted((r["cid"], r["cemb"]) for r in new_cents)
-    _CENTROID_REGISTRY[model_key] = cent_rows
-    # final assignment under the trained centroids — map-only plan
-    return _assign(emb, cent_rows).select("vec_id", "cluster_id", "dist2")
+    return cent_rows
 
 
 SEMDEDUP_COS = 0.4  # same cosine scale as the dedup_embedding family

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from hedera_spark.functions.ngrams import ngram_sql
 from hedera_spark.sources.revisions import load_revisions, load_snapshots
+from hedera_spark.sources.tables import derived, table_state_key
 
 def _page_time() -> Window:
     return Window.partitionBy("page_id").orderBy("ts", "rev_id")
@@ -42,71 +43,47 @@ REV_SEQ_BUCKET = 1024
 REV_HOT_PAGE_REVS = 400
 _HOT_CAP = 100_000
 
-# hot-page statistics memo, keyed by the TABLE FILE identity (path, size,
-# mtime): the hot set is a property of the data, not the session — the
-# same role ANALYZE/catalog statistics play on a real warehouse, where
-# recomputing a per-key count per query over 100 TB would be absurd. The
-# (size, mtime) part invalidates the memo the moment the file changes,
-# so this is a pure perf memo, never a correctness risk. Module-level on
-# purpose: reset_session_state clears Spark caches and trained models
-# (things a bench rep must re-pay), but table stats survive a session
-# reset exactly like a catalog survives a session.
-_HOT_STATS: dict[tuple, list | None] = {}
 
-
-def _table_sig(sf_dir: str, table: str) -> tuple:
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(path)
-        return (path, st.st_size, st.st_mtime_ns)
-    except OSError:
-        return (path, None, None)
-
-
-def _hot_pages(
-    df: DataFrame, key: str = "page_id", sig: tuple | None = None
-) -> list | None:
+def _hot_pages(df: DataFrame, state: tuple | None = None) -> list | None:
     """Page keys with more than REV_HOT_PAGE_REVS rows — the windows that
     would pin one task under the plain page-keyed form (AQE cannot split
     a skewed WINDOW partition). The pre-agg is a map-side-combined count
-    on the pruned key column: one cheap extra job, |pages| rows shuffled,
-    memoized per table-file identity (see _HOT_STATS). Returns None past
-    _HOT_CAP hot keys (a pathological corpus where the literal isin
-    filter itself would be the problem) — callers then send the WHOLE
-    input through the bucketed form, the pre-r7 behavior."""
-    cache_key = (sig, key, REV_HOT_PAGE_REVS) if sig is not None else None
-    if cache_key is not None and cache_key in _HOT_STATS:
-        return _HOT_STATS[cache_key]
-    rows = (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > REV_HOT_PAGE_REVS)
-        .select(key)
-        .limit(_HOT_CAP + 1)
-        .collect()
-    )
-    hot = None if len(rows) > _HOT_CAP else [r[0] for r in rows]
-    if cache_key is not None and sig[1] is not None:
-        _HOT_STATS[cache_key] = hot
-    return hot
+    on the pruned key column: one cheap extra job, |pages| rows shuffled.
+    With the input table's `state` (table_state_key) it is kept in the
+    `tables.derived` store and survives reset_session_state, as catalog
+    statistics survive a session; without one it is computed each call.
+    Returns None past _HOT_CAP hot keys (a pathological corpus where the
+    literal isin filter itself would be the problem) — callers then send
+    the WHOLE input through the bucketed form, the pre-r7 behavior."""
+
+    def compute() -> list | None:
+        rows = (
+            df.groupBy("page_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .where(F.col("n") > REV_HOT_PAGE_REVS)
+            .select("page_id")
+            .limit(_HOT_CAP + 1)
+            .collect()
+        )
+        return None if len(rows) > _HOT_CAP else [r[0] for r in rows]
+
+    if state is None:
+        return compute()
+    return derived(state, "hot_pages", REV_HOT_PAGE_REVS, compute)
 
 
-def _route_hot(
-    df: DataFrame, plain, bucketed, key: str = "page_id",
-    sig: tuple | None = None,
-) -> DataFrame:
+def _route_hot(df: DataFrame, plain, bucketed, state: tuple) -> DataFrame:
     """plain(cold rows) UNION bucketed(hot rows), degenerating to a single
     branch when every page is cold (the common case: no union, no second
-    scan) or when the hot set overflows the literal-filter cap."""
-    hot = _hot_pages(df, key, sig)
+    scan) or when the hot set overflows the literal-filter cap. `state`
+    is the input table's table_state_key."""
+    hot = _hot_pages(df, state)
     if hot is None:
         return bucketed(df)
     if not hot:
         return plain(df)
-    return plain(df.where(~F.col(key).isin(hot))).unionByName(
-        bucketed(df.where(F.col(key).isin(hot)))
+    return plain(df.where(~F.col("page_id").isin(hot))).unionByName(
+        bucketed(df.where(F.col("page_id").isin(hot)))
     )
 
 
@@ -117,8 +94,9 @@ def rev_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     io/etl/RevisionIdsFormat.java.
     """
     revs = load_revisions(spark, sf_dir).select("page_id", "rev_id", "ts")
-    return _route_hot(revs, _rev_ids_plain, _rev_ids_bucketed,
-                      sig=_table_sig(sf_dir, "events"))
+    return _route_hot(
+        revs, _rev_ids_plain, _rev_ids_bucketed, table_state_key(sf_dir, "events")
+    )
 
 
 def _rev_ids_plain(revs: DataFrame) -> DataFrame:
@@ -188,8 +166,9 @@ def rev_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag, which is ~25% cheaper when revisions scatter ~1 per bucket.
     Exactly the same pairs, value deltas and gaps either way."""
     revs = load_revisions(spark, sf_dir).select("page_id", "rev_id", "ts", "value")
-    return _route_hot(revs, _rev_pairs_plain, _rev_pairs_bucketed,
-                      sig=_table_sig(sf_dir, "events"))
+    return _route_hot(
+        revs, _rev_pairs_plain, _rev_pairs_bucketed, table_state_key(sf_dir, "events")
+    )
 
 
 def _rev_pairs_finish(paired: DataFrame) -> DataFrame:
@@ -373,8 +352,9 @@ def rev_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantee after a shuffle.
     """
     snaps = load_snapshots(spark, sf_dir).select("page_id", "rev_seq", "text")
-    return _route_hot(snaps, _rev_concat_plain, _rev_concat_bucketed,
-                      sig=_table_sig(sf_dir, "documents"))
+    return _route_hot(
+        snaps, _rev_concat_plain, _rev_concat_bucketed, table_state_key(sf_dir, "documents")
+    )
 
 
 def _rev_concat_plain(snaps: DataFrame) -> DataFrame:
@@ -471,8 +451,9 @@ def rev_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rev_seq").alias("doc_id"),
         F.array_distinct(F.split(F.col("text"), " ")).alias("toks"),
     )
-    return _route_hot(toks, _rev_diff_plain, _rev_diff_bucketed,
-                      sig=_table_sig(sf_dir, "documents"))
+    return _route_hot(
+        toks, _rev_diff_plain, _rev_diff_bucketed, table_state_key(sf_dir, "documents")
+    )
 
 
 def _rev_diff_plain(toks: DataFrame) -> DataFrame:

@@ -18,7 +18,6 @@ explode in the hot path.
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -33,29 +32,13 @@ LSH_TOPK = 3
 COS_THRESHOLD = 0.4
 QUERY_MOD = 25  # vec_id % 25 == 0 -> the query set (scales with sf)
 
-# Ceiling for broadcasting the ANN query side. The query set is a fixed
-# 1/QUERY_MOD FRACTION of the corpus, not a fixed size: at the test SFs
-# it is under a megabyte and broadcasting is the right plan (the corpus
-# side is never shuffled), but at the declared 100 TB scale it is ~4 TB
-# and an unconditional F.broadcast() would OOM the driver and every
-# executor (guide §3.1: broadcast only what fits; 8 GB hard cap). Gate
-# on the planner's own size estimate — conservative here, since the
-# non-CBO estimate does not discount the % filter, i.e. it sees the
-# FULL corpus width — and above the ceiling return the frame unhinted
-# so the planner falls back to a shuffled equality join (the bucket/
-# cell-keyed paths) or a partitioned nested-loop (the brute-force
-# baselines), both memory-safe. Env-tunable so a cluster deployment can
-# size it to executor memory; the default keeps every test-SF plan
-# identical (estimates there are ~1 MB).
-ANN_BROADCAST_MAX_BYTES_ENV = "HEDERA_ANN_BROADCAST_MAX_BYTES"
-_ANN_BROADCAST_MAX_DEFAULT = 256 * 1024 * 1024
-
-
-def _bcast_queries(q: DataFrame) -> DataFrame:
-    limit = int(
-        os.environ.get(ANN_BROADCAST_MAX_BYTES_ENV, _ANN_BROADCAST_MAX_DEFAULT)
-    )
-    return broadcast_if_fits(q, limit)
+# Every ANN query-side broadcast goes through broadcast_if_fits
+# (plans/broadcast.py): the query set is a fixed 1/QUERY_MOD FRACTION of
+# the corpus, under a megabyte at the test SFs, where broadcasting is the
+# right plan (the corpus side is never shuffled), but ~4 TB at the
+# declared 100 TB scale. Above the ceiling the planner falls back to a
+# shuffled equality join (the bucket/cell-keyed paths) or a partitioned
+# nested-loop (the brute-force baselines), both memory-safe.
 
 
 def _sign_from_seed(seed: str) -> float:
@@ -127,7 +110,7 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     ).where(F.col("q_id") % QUERY_MOD == 0)
-    pairs = emb.join(_bcast_queries(q), F.col("vec_id") != F.col("q_id"))
+    pairs = emb.join(broadcast_if_fits(q), F.col("vec_id") != F.col("q_id"))
     scored = pairs.select(
         "q_id",
         F.col("vec_id").alias("neighbor_id"),
@@ -159,7 +142,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("q_nrm"),
         "bucket",
     ).where(F.col("q_id") % QUERY_MOD == 0)
-    pairs = emb.join(_bcast_queries(q), "bucket").where(F.col("vec_id") != F.col("q_id"))
+    pairs = emb.join(broadcast_if_fits(q), "bucket").where(F.col("vec_id") != F.col("q_id"))
     scored = pairs.select(
         "q_id",
         F.col("vec_id").alias("neighbor_id"),
@@ -361,7 +344,7 @@ def ann_lsh_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("q_id") % QUERY_MOD == 0
     )
     cand = (
-        eb.join(_bcast_queries(qk), ["t", "bucket"])
+        eb.join(broadcast_if_fits(qk), ["t", "bucket"])
         .where(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id")
         .distinct()
@@ -375,7 +358,7 @@ def ann_lsh_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = (
         cand.join(nemb, "vec_id")
-        .join(_bcast_queries(qemb), "q_id")
+        .join(broadcast_if_fits(qemb), "q_id")
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -609,7 +592,7 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("q_label"),
         F.col("nrm").alias("q_nrm"),
     ).where(F.col("q_id") % QUERY_MOD == 0)
-    scored = emb.join(_bcast_queries(q), F.col("vec_id") != F.col("q_id")).select(
+    scored = emb.join(broadcast_if_fits(q), F.col("vec_id") != F.col("q_id")).select(
         "q_id",
         "q_label",
         "vec_id",
@@ -721,7 +704,7 @@ def ann_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("q_nrm"),
     ).where(F.col("q_id") % QUERY_MOD == 0)
     recon = _sq_recon(spark, sf_dir)
-    scored = recon.join(_bcast_queries(q), F.col("vec_id") != F.col("q_id")).select(
+    scored = recon.join(broadcast_if_fits(q), F.col("vec_id") != F.col("q_id")).select(
         "q_id",
         F.col("vec_id").alias("neighbor_id"),
         F.round(
@@ -1157,7 +1140,7 @@ def dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("temb").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     ).where(F.col("q_id") % QUERY_MOD == 0)
-    scored = emb.join(_bcast_queries(q), F.col("vec_id") != F.col("q_id")).select(
+    scored = emb.join(broadcast_if_fits(q), F.col("vec_id") != F.col("q_id")).select(
         "q_id",
         F.col("vec_id").alias("neighbor_id"),
         F.round(
@@ -1366,7 +1349,7 @@ def ann_candidate_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("q_id") % QUERY_MOD == 0
     )
     lsh = (
-        b.join(_bcast_queries(qb), "bucket")
+        b.join(broadcast_if_fits(qb), "bucket")
         .where(F.col("vec_id") != F.col("q_id"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
         .select(F.lit("lsh").alias("method"), "n_candidates")
@@ -1386,7 +1369,7 @@ def ann_candidate_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("q_id") % QUERY_MOD == 0
     )
     multi = (
-        eb.join(_bcast_queries(qk), ["t", "bucket"])
+        eb.join(broadcast_if_fits(qk), ["t", "bucket"])
         .where(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id")
         .distinct()
@@ -1399,7 +1382,7 @@ def ann_candidate_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("q_id") % QUERY_MOD == 0
     )
     ivf = (
-        cells.join(_bcast_queries(qc), "cid")
+        cells.join(broadcast_if_fits(qc), "cid")
         .where(F.col("vec_id") != F.col("q_id"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
         .select(F.lit("ivf").alias("method"), "n_candidates")
@@ -1414,7 +1397,7 @@ def ann_candidate_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("q_id") % QUERY_MOD == 0
     )
     ada = (
-        ab.join(_bcast_queries(qa), "bucket")
+        ab.join(broadcast_if_fits(qa), "bucket")
         .where(F.col("vec_id") != F.col("q_id"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
         .select(F.lit("lsh_adaptive").alias("method"), "n_candidates")
@@ -1494,7 +1477,7 @@ def ann_lsh_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("q_nrm"),
         "bucket",
     ).where(F.col("q_id") % QUERY_MOD == 0)
-    pairs = emb.join(_bcast_queries(q), "bucket").where(F.col("vec_id") != F.col("q_id"))
+    pairs = emb.join(broadcast_if_fits(q), "bucket").where(F.col("vec_id") != F.col("q_id"))
     scored = pairs.select(
         "q_id",
         F.col("vec_id").alias("neighbor_id"),

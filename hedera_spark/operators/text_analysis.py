@@ -248,16 +248,19 @@ def loader_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(*[F.lit(e) for e in range(LOADER_EPOCHS)])
         ).alias("epoch"),
     )
+    # concat, not concat_ws: a null lang nulls the key (and so the
+    # shard), as the oracle's `||` does, instead of being skipped
     keyed = fanned.withColumn(
         "shuffle_key",
         F.conv(
             F.substring(
                 F.md5(
-                    F.concat_ws(
-                        "~",
-                        F.lit("shard"),
+                    F.concat(
+                        F.lit("shard~"),
                         F.col("epoch").cast("string"),
+                        F.lit("~"),
                         F.col("lang"),
+                        F.lit("~"),
                         F.col("bin_id").cast("string"),
                     )
                 ),

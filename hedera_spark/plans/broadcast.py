@@ -16,6 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# The one ceiling for every gated broadcast, read at call time. The
+# non-CBO estimate errs high (see plan_bytes), and at the test scale
+# factors every gated frame estimates near a megabyte, so the plans
+# there are broadcast plans.
+BROADCAST_MAX_BYTES = 256 * 1024 * 1024
+
 
 def plan_bytes(df: DataFrame) -> int:
     """The optimizer's size estimate for `df`, in bytes. Without CBO a
@@ -23,7 +29,7 @@ def plan_bytes(df: DataFrame) -> int:
     return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
 
 
-def broadcast_if_fits(df: DataFrame, max_bytes: int) -> DataFrame:
-    """`F.broadcast(df)` when its estimate is at most `max_bytes`, else
-    `df` unchanged."""
-    return F.broadcast(df) if plan_bytes(df) <= max_bytes else df
+def broadcast_if_fits(df: DataFrame) -> DataFrame:
+    """`F.broadcast(df)` when its estimate is at most BROADCAST_MAX_BYTES,
+    else `df` unchanged."""
+    return F.broadcast(df) if plan_bytes(df) <= BROADCAST_MAX_BYTES else df

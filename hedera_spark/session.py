@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from hedera_spark.sources import tables
+
 
 def get_spark(app_name: str = "hedera_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -97,39 +99,23 @@ def get_spark(app_name: str = "hedera_spark", shuffle_partitions: int | None = N
 
 def reset_session_state(spark: SparkSession) -> None:
     """Return a long-lived session to a plan-clean state between
-    materialized queries.
+    materialized queries: bench.py calls it between reps, the plan-audit
+    tests before asserting plan shapes, and any driver embedding the
+    engine in a long-lived session should call it between independent
+    queries.
 
-    Two kinds of state accumulate across queries in one session and
-    change LATER plans, not just memory pressure:
+    It releases persisted intermediates: Spark's CacheManager
+    substitutes a cached subtree into any new plan that contains it, and
+    AQE does not reuse exchanges across the resulting
+    TableCacheQueryStage nodes, so a leaked cache changes later plans.
 
-    - Persisted intermediates (the shingle kernel in operators/dedup.py
-      and operators/text_analysis.py, graph frontiers, ...). Spark's
-      CacheManager substitutes a cached subtree into any new plan that
-      contains it, and AQE does NOT reuse exchanges across the resulting
-      TableCacheQueryStage nodes — so e.g. a leaked `_shingles` cache
-      makes dedup_simhash/dedup_minhash compute their fingerprint
-      aggregate on BOTH sides of the band self-join (the r4
-      ReusedExchange win silently evaporates).
-    - The in-process model registries (kmeans._CENTROID_REGISTRY,
-      importance._LR_REGISTRY): trained once per sf_dir, so a timing rep
-      after the first measures scoring only, and a query after an
-      in-place data rewrite scores under a stale model.
-
-    bench.py calls this between reps; the plan-audit tests call it
-    before asserting plan shapes; any driver embedding the engine in a
-    long-lived session should call it between independent queries.
-
-    One process cache deliberately survives a reset: the parquet schemas
-    `sources.tables.load_table` and `streaming.source.probe_schema`
-    inferred (`tables._SCHEMA_CACHE`). A cached schema is a pure function
-    of its key, the path plus the size/mtime fingerprint of its files,
-    so it can never go stale or change a plan; a rewrite in place
-    changes the key and re-infers. Clearing it would only put one
-    footer-reading Spark job back into every table load and stream
-    start of the next query.
+    It also ends the session lifetime in `sources.tables.derived`, the
+    one store of what is derived from input files: trained models
+    (k-means centroids, LR weights) are dropped, so a timing rep pays a
+    full train. Parquet schemas and hot-page stats keep their process
+    lifetime: each is a pure function of its file-state key, so it can
+    never go stale or change a plan, and keeping it spares the next
+    query a footer-reading or counting job.
     """
     spark.catalog.clearCache()
-    from hedera_spark.operators import importance, kmeans
-
-    kmeans._CENTROID_REGISTRY.clear()
-    importance._LR_REGISTRY.clear()
+    tables.reset_derived()

@@ -32,17 +32,38 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# The schema `spark.read.parquet` inferred for each table, keyed by
-# table_state_key (path plus file size/mtime fingerprint), and for each
-# stream directory streaming.source.probe_schema probed, keyed by
-# (path_state_key, recursive). Inference reads the parquet footers in a
-# Spark job on every read; a reread with the cached schema fires none. A
-# rewrite in place, or a file landing in a stream directory, changes the
-# fingerprint and so re-infers. A key that could not be stat'ed
-# (path-only, length 1) is never cached: nothing would notice the data
-# changing under it. The inferred schema also depends on the reader
-# confs, which both readers pin (nanosAsLong) before every read.
-_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+# Everything derived from input files, in one store keyed by (file-state
+# fingerprint, kind, params): parquet schemas, the revision operators'
+# hot-page stats, trained k-means centroids and LR weights. Each is a
+# pure function of its inputs, so a hit can never change a result, and
+# a file added, removed or rewritten changes the fingerprint and so
+# recomputes. A path-only state (length 1, a path the driver could not
+# stat) is never stored: nothing would notice the data changing under
+# it. Two lifetimes: the kinds in SESSION_KINDS (trained models, whose
+# training a timing rep must pay again) are dropped by
+# reset_derived(); schemas and hot-page stats survive it, as catalog
+# statistics survive a session.
+_DERIVED: dict[tuple, object] = {}
+SESSION_KINDS = frozenset({"kmeans_centroids", "lr_weights"})
+_MISSING = object()
+
+
+def derived(state: tuple, kind: str, params, compute):
+    """The stored value under (state, kind, params), else `compute()`,
+    stored unless `state` is path-only. A stored None is a hit."""
+    key = (state, kind, params)
+    value = _DERIVED.get(key, _MISSING)
+    if value is _MISSING:
+        value = compute()
+        if len(state) > 1:
+            _DERIVED[key] = value
+    return value
+
+
+def reset_derived() -> None:
+    """Drop the session-lifetime entries (SESSION_KINDS)."""
+    for key in [k for k in _DERIVED if k[1] in SESSION_KINDS]:
+        del _DERIVED[key]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -54,14 +75,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # host session's zone.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = table_state_key(sf_dir, name)
-    schema = _SCHEMA_CACHE.get(key)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if schema is None:
-        schema = df.schema
-        if len(key) > 1:
-            _SCHEMA_CACHE[key] = schema
+    # the inferred schema also depends on the reader confs set above;
+    # streaming.source.probe_schema pins the same ones and shares entries
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = derived(
+        table_state_key(sf_dir, name), "schema", False, lambda: spark.read.parquet(path).schema
+    )
+    df = spark.read.schema(schema).parquet(path)
     # Nanos columns arrive as LongType under the legacy conf; restore them
     # to TimestampType at microsecond precision (matching DuckDB's
     # ns→us truncation) so downstream operators see real timestamps.
@@ -83,11 +103,9 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 
 def table_state_key(sf_dir: str, name: str) -> tuple:
-    """Cache key for driver-side model registries: (path, file metadata
-    fingerprint). The in-process model stores (kmeans centroids, the LR
-    quality classifier) must retrain when the data under a path changes
-    within one session — a path-only key silently serves a stale model
-    after an in-place rewrite. See path_state_key for the fingerprint."""
+    """The file-state fingerprint of table `name` under `sf_dir` (see
+    path_state_key): the state half of every `derived` key read from a
+    table."""
     return path_state_key(os.path.join(sf_dir, f"{name}.parquet"))
 
 
@@ -96,10 +114,9 @@ def path_state_key(path: str) -> tuple:
     File (relpath, size, mtime_ns) triples are a metadata-only
     fingerprint (no data scan, so checking the key costs microseconds);
     a file added, removed or rewritten under a directory changes it. On
-    a store where the driver cannot stat (HDFS/S3 paths), fall back to
-    path-only keying (length 1): the model registries then assume
-    path->data immutability for the process lifetime; the schema caches
-    never store under such a key."""
+    a store where the driver cannot stat (HDFS/S3 paths) it is path-only
+    (length 1), and `derived` stores nothing under it: schemas, stats
+    and models are then computed again on every call."""
     try:
         if os.path.isdir(path):
             parts = []
@@ -108,7 +125,7 @@ def path_state_key(path: str) -> tuple:
                 # recursion and the files so the fingerprint tuple is a
                 # deterministic function of the file SET, not of inode
                 # enumeration order (a spurious order change would force
-                # a needless model retrain)
+                # a needless recompute)
                 dirs.sort()
                 for f in sorted(files):
                     fp = os.path.join(root, f)

@@ -21,7 +21,7 @@ decoding and only the ts-encoding branch left to us.
 Scale: the probe reads footers only (no data pages), once per state of
 the probed path; the stream itself is a standard file source —
 checkpointed offsets, per-file splits, predicate pushdown on the pinned
-schema. The only state held here is the probed-schema cache.
+schema. The probed schema is kept in `sources.tables.derived`.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hedera_spark.sources.tables import _SCHEMA_CACHE, path_state_key
+from hedera_spark.sources.tables import derived, path_state_key
 
 
 def normalize_ts(df: DataFrame) -> DataFrame:
@@ -61,23 +61,20 @@ def probe_schema(
     surfaces as LongType instead of erroring, and pins the session to
     UTC like the batch loader.
 
-    The schema is kept in `tables._SCHEMA_CACHE` under (path_state_key,
-    recursive), so restarting a stream over an unchanged directory
-    fires no job, while a directory that gained, lost or rewrote a file
-    is probed again. A path that cannot be stat'ed is never cached."""
+    The schema is kept in the `tables.derived` store under
+    (path_state_key, "schema", recursive), the entry `load_table` reads
+    for the same path, so restarting a stream over an unchanged
+    directory fires no job, while a directory that gained, lost or
+    rewrote a file is probed again. A path that cannot be stat'ed is
+    never cached."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    state = path_state_key(path)
-    key = (state, recursive)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        reader = spark.read
-        if recursive:
-            reader = reader.option("recursiveFileLookup", "true")
-        schema = reader.parquet(path).schema
-        if len(state) > 1:
-            _SCHEMA_CACHE[key] = schema
-    return schema
+    return derived(
+        path_state_key(path),
+        "schema",
+        recursive,
+        lambda: spark.read.option("recursiveFileLookup", recursive).parquet(path).schema,
+    )
 
 
 def stream_events_dir(

@@ -9,6 +9,10 @@ pays while its plan is being built, before any action runs.
   and a round-trip ceiling.
 - dedup_minhash's signature and LSH bands are SQL text too, under a
   round-trip ceiling of their own.
+- Everything derived from input files lives in one store keyed by file
+  state: a reset drops the trained models and keeps schemas and
+  hot-page stats, a path-only state is never stored, and a part file
+  rewritten inside a directory-form table is noticed.
 - The session turns PySpark's per-call origin capture off; analysis
   errors must still name the offending column.
 """
@@ -95,10 +99,10 @@ def test_unfingerprinted_path_is_never_cached(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         tables, "table_state_key", lambda sf_dir, name: (os.path.join(sf_dir, f"{name}.parquet"),)
     )
-    before = dict(tables._SCHEMA_CACHE)
+    before = dict(tables._DERIVED)
     for _ in range(2):
         assert _jobs_fired(spark, lambda: tables.load_table(spark, str(tmp_path), "embeddings")) >= 1
-    assert tables._SCHEMA_CACHE == before
+    assert tables._DERIVED == before
 
 
 # --- schema probe at stream start ---------------------------------------
@@ -146,10 +150,10 @@ def test_unfingerprinted_stream_probe_is_never_cached(spark, tmp_path, monkeypat
 
     _write_events(tmp_path / "part-0.parquet", with_extra=False)
     monkeypatch.setattr(source, "path_state_key", lambda path: (path,))
-    before = dict(tables._SCHEMA_CACHE)
+    before = dict(tables._DERIVED)
     for _ in range(2):
         assert _jobs_fired(spark, lambda: source.stream_events_dir(spark, str(tmp_path))) >= 1
-    assert tables._SCHEMA_CACHE == before
+    assert tables._DERIVED == before
 
 
 # --- k-means build path ------------------------------------------------
@@ -270,6 +274,98 @@ def test_dedup_minhash_build_round_trip_ceiling(spark, monkeypatch):
     monkeypatch.undo()
     reset_session_state(spark)
     assert 0 < calls[0] <= 400
+
+
+# --- the derived store ------------------------------------------------
+
+
+def test_reset_retrains_models(spark):
+    """reset_session_state drops trained models: the next k-means build
+    pays the init pull and every Lloyd iteration again, and the next
+    quality_classifier build its gradient steps, which a cache-only
+    clear (bench.py's score-only call) does not."""
+    from hedera_spark.operators.importance import LR_ITERATIONS, quality_classifier
+    from hedera_spark.operators.kmeans import KMEANS_ITERATIONS, kmeans_embeddings
+    from hedera_spark.session import reset_session_state
+
+    kmeans_embeddings(spark, SF_DIR)
+    reset_session_state(spark)
+    assert _jobs_fired(spark, lambda: kmeans_embeddings(spark, SF_DIR)) >= 1 + 2 * KMEANS_ITERATIONS
+
+    quality_classifier(spark, SF_DIR)
+    spark.catalog.clearCache()  # caches drop, model stays
+    scoring = _jobs_fired(spark, lambda: quality_classifier(spark, SF_DIR))
+    reset_session_state(spark)
+    training = _jobs_fired(spark, lambda: quality_classifier(spark, SF_DIR))
+    reset_session_state(spark)
+    assert training >= scoring + LR_ITERATIONS
+
+
+def test_reset_keeps_schemas_and_hot_page_stats(spark):
+    """Schemas and hot-page stats outlive a reset: on unchanged files a
+    load_table and a rev_pairs build fire no job."""
+    from hedera_spark.operators.revisions import rev_pairs
+    from hedera_spark.session import reset_session_state
+    from hedera_spark.sources.tables import load_table
+
+    rev_pairs(spark, SF_DIR)
+    reset_session_state(spark)
+    assert _jobs_fired(spark, lambda: load_table(spark, SF_DIR, "events")) == 0
+    assert _jobs_fired(spark, lambda: rev_pairs(spark, SF_DIR)) == 0
+
+
+def test_path_only_state_is_never_stored(spark, monkeypatch):
+    """With every path unstat-able, nothing of any kind is stored: each
+    k-means build trains again, and the store is left as it was."""
+    from hedera_spark.operators.importance import quality_classifier
+    from hedera_spark.operators.kmeans import KMEANS_ITERATIONS, kmeans_embeddings
+    from hedera_spark.operators.revisions import rev_pairs
+    from hedera_spark.session import reset_session_state
+    from hedera_spark.sources import tables
+
+    reset_session_state(spark)
+    monkeypatch.setattr(tables, "path_state_key", lambda path: (path,))
+    for _ in range(2):
+        jobs = _jobs_fired(spark, lambda: kmeans_embeddings(spark, SF_DIR))
+        assert jobs >= 1 + 2 * KMEANS_ITERATIONS
+    before = dict(tables._DERIVED)
+    tables.load_table(spark, SF_DIR, "documents")
+    rev_pairs(spark, SF_DIR)
+    quality_classifier(spark, SF_DIR)
+    reset_session_state(spark)
+    assert tables._DERIVED == before
+
+
+def test_hot_pages_follow_a_rewritten_part_file(spark, tmp_path):
+    """A directory-form events table whose part file is rewritten in
+    place (the directory's own size and mtime unchanged) gets its hot
+    pages counted again: a page made hot by the rewrite takes the
+    bucketed branch."""
+    from hedera_spark.operators.revisions import REV_HOT_PAGE_REVS, rev_pairs
+    from hedera_spark.plans import formatted_plan
+
+    events = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
+    table_dir = tmp_path / "events.parquet"
+    table_dir.mkdir()
+    pq.write_table(events.slice(0, 500), table_dir / "part-0.parquet")
+    pq.write_table(events.slice(500), table_dir / "part-1.parquet")
+    assert "Union" not in formatted_plan(rev_pairs(spark, str(tmp_path)))
+
+    # every row of part-1 now belongs to one page, deeper than the cut
+    tail = events.slice(500)
+    assert tail.num_rows > REV_HOT_PAGE_REVS
+    hot = tail.set_column(
+        tail.schema.get_field_index("user_id"),
+        "user_id",
+        pa.array([0] * tail.num_rows, type=pa.int64()),
+    )
+    dir_st = os.stat(table_dir)
+    part = table_dir / "part-1.parquet"
+    pq.write_table(hot, part)
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    os.utime(table_dir, ns=(dir_st.st_atime_ns, dir_st.st_mtime_ns))
+    assert "Union" in formatted_plan(rev_pairs(spark, str(tmp_path)))
 
 
 # --- origin capture off -----------------------------------------------

@@ -321,3 +321,38 @@ def test_ngrams_and_lsh_bands_go_through_the_shared_kernels():
             if i not in allowed and re.search(_NGRAM_OR_BAND_CODE, line):
                 hits.append(f"hedera_spark/{rel}:{i}")
     assert not hits, f"hand-rolled n-gram or LSH band code, use the kernels: {hits}"
+
+
+def test_derived_state_has_one_store():
+    """What is derived from input files (schemas, hot-page stats, trained
+    models) has one owner, `sources.tables.derived`, with one keying
+    rule and two lifetimes. A module-level memo dict or an `os.stat(`
+    under operators/ is a second copy of that store, and an operator
+    import in session.py means reset_session_state is clearing a
+    private one."""
+    import ast
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "hedera_spark"
+    memo = r"\{\}|dict\(\)|(collections\.)?(defaultdict|OrderedDict)\(.*\)"
+    hits = []
+    for path in sorted((root / "operators").rglob("*.py")):
+        rel = f"hedera_spark/{path.relative_to(root).as_posix()}"
+        src = path.read_text()
+        hits += [
+            f"{rel}:{n.lineno}"
+            for n in ast.parse(src).body
+            if isinstance(n, (ast.Assign, ast.AnnAssign))
+            and n.value is not None
+            and re.fullmatch(memo, ast.unparse(n.value))
+        ]
+        hits += [f"{rel}:{i}" for i, line in enumerate(src.splitlines(), 1) if "os.stat(" in line]
+    session = ast.parse((root / "session.py").read_text())
+    hits += [
+        f"hedera_spark/session.py:{n.lineno}"
+        for n in ast.walk(session)
+        if isinstance(n, (ast.Import, ast.ImportFrom))
+        and any("operators" in f"{getattr(n, 'module', None)}.{a.name}" for a in n.names)
+    ]
+    assert not hits, f"derived state outside sources/tables.derived: {hits}"

@@ -544,13 +544,13 @@ def test_rev_window_family_routes_adaptively(spark):
 def test_ann_query_broadcast_is_size_gated(spark, monkeypatch):
     """The ANN query side is a fixed 1/QUERY_MOD FRACTION of the corpus,
     so an unconditional broadcast hint would ship ~4 TB per executor at
-    the declared 100 TB scale. similarity._bcast_queries gates the hint
+    the declared 100 TB scale. plans.broadcast.broadcast_if_fits gates the hint
     on the planner's size estimate: below the ceiling the audited
     broadcast plan is unchanged; above it the hint is dropped and the
     bucket equi-join falls back to a memory-safe shuffled join with the
     identical result (guide §3.1: broadcast only what fits)."""
-    from hedera_spark.operators import similarity as sim
     from hedera_spark.operators.similarity import ann_lsh
+    from hedera_spark.plans import broadcast
 
     # default ceiling: the test-SF estimate fits -> the shipped plan is
     # still the broadcast shape the before/after plan files pin
@@ -559,7 +559,7 @@ def test_ann_query_broadcast_is_size_gated(spark, monkeypatch):
     # forced-large corpus: ceiling 0 must drop the hint; with the
     # session's auto-broadcast also off, the planner's only choice is a
     # shuffled join — the path a 100 TB query side would take
-    monkeypatch.setenv(sim.ANN_BROADCAST_MAX_BYTES_ENV, "0")
+    monkeypatch.setattr(broadcast, "BROADCAST_MAX_BYTES", 0)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -570,7 +570,7 @@ def test_ann_query_broadcast_is_size_gated(spark, monkeypatch):
         shuffled = {tuple(r) for r in df.collect()}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    monkeypatch.delenv(sim.ANN_BROADCAST_MAX_BYTES_ENV, raising=False)
+    monkeypatch.undo()
     base = {tuple(r) for r in ann_lsh(spark, SF_DIR).collect()}
     assert shuffled == base
 
@@ -582,6 +582,7 @@ def test_dedup_cold_route_broadcast_is_size_gated(spark, monkeypatch):
     query side: under the ceiling the join is broadcast; at ceiling 0
     (auto-broadcast off too) it is a shuffled join with identical rows."""
     from hedera_spark.operators import dedup
+    from hedera_spark.plans import broadcast
     from hedera_spark.session import reset_session_state
 
     base = {tuple(r) for r in dedup.dedup_ngram_jaccard(spark, SF_DIR).collect()}
@@ -594,7 +595,7 @@ def test_dedup_cold_route_broadcast_is_size_gated(spark, monkeypatch):
     assert has_broadcast_join(cold)
     assert {tuple(r) for r in cold.collect()} == base
 
-    monkeypatch.setattr(dedup, "COLD_VOCAB_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(broadcast, "BROADCAST_MAX_BYTES", 0)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

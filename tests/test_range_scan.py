@@ -106,7 +106,7 @@ def _duck_documents(sf_dir: str, sql: str):
         con.close()
 
 
-@pytest.mark.parametrize("name", ["pack_sequences", "score_quantile_norm"])
+@pytest.mark.parametrize("name", ["pack_sequences", "score_quantile_norm", "loader_shards"])
 def test_null_group_keys_keep_their_rows(spark, null_keyed_sf, name):
     """A null lang (source) is a group of its own in the oracle's
     PARTITION BY; the scan's offsets join must not drop those rows."""
@@ -116,6 +116,17 @@ def test_null_group_keys_keep_their_rows(spark, null_keyed_sf, name):
     got = QUERIES[name](spark, null_keyed_sf).toPandas()
     assert want.isna().any().any(), "the corpus should carry null keys"
     assert_frames_match(got, want, name)
+
+
+def test_shard_skew_audit_counts_the_null_lang_shard(spark, null_keyed_sf):
+    """Null-lang bins have a null shard in loader_shards, so the audit
+    built on it sees one more shard group than LOADER_SHARDS, as its
+    oracle does."""
+    from hedera_spark.registry import ORACLE, QUERIES
+
+    want = _duck_documents(null_keyed_sf, ORACLE["shard_skew_audit"])
+    got = QUERIES["shard_skew_audit"](spark, null_keyed_sf).toPandas()
+    assert_frames_match(got, want, "shard_skew_audit")
 
 
 def test_classifier_auc_counts_null_lang_as_negative(spark, null_keyed_sf):

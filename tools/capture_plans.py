@@ -31,6 +31,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import bench
+    from hedera_spark.plans import formatted_plan
     from hedera_spark.registry import QUERIES
     from hedera_spark.session import get_spark, reset_session_state
 
@@ -49,12 +50,8 @@ def main() -> None:
             print(f"SKIP {n}: not in registry", file=sys.stderr)
             continue
         reset_session_state(spark)
-        df = QUERIES[n](spark, args.sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
         path = out_dir / f"{n}_{args.suffix}.txt"
-        path.write_text(plan)
+        path.write_text(formatted_plan(QUERIES[n](spark, args.sf_dir)))
         print(f"wrote {path}")
 
 

@@ -69,7 +69,7 @@ def _features(plan: str) -> dict[str, int]:
 def main() -> None:
     from hedera_spark.plans import formatted_plan
     from hedera_spark.registry import QUERIES
-    from hedera_spark.session import get_spark
+    from hedera_spark.session import get_spark, reset_session_state
 
     spark = get_spark("hedera_spark-plan-report")
     spark.sparkContext.setLogLevel("ERROR")
@@ -77,7 +77,7 @@ def main() -> None:
     rows = []
     totals = {k: 0 for k in COLS}
     for name, fn in sorted(QUERIES.items()):
-        spark.catalog.clearCache()
+        reset_session_state(spark)
         try:
             counts = _features(formatted_plan(fn(spark, SF_DIR)))
         except Exception as exc:  # keep sweeping
