@@ -18,40 +18,55 @@ assignment ties break to the smallest centroid id via a struct-ordered
 min_by. The DuckDB oracle unrolls the same KMEANS_ITERATIONS steps as
 CTEs (the pagerank_anchors pattern).
 
-Scale (100 TB): per iteration, the corpus is touched once — the K·dims
-centroid table rides into the plan as LITERALS (the parameter-server
-discipline of stream_drift's fences; a bounded driver pull of K=8 rows
-per step, nothing corpus-sized), so assignment is a pure map — per-row
-fold over the centroid array, argmin via struct-ordered array_min, NO
-shuffle and NO row amplification — followed by one partial-agg shuffle
-keyed on the cluster alone, one `round(avg(emb[i]), 6)` per coordinate
-(bounded by K per partition, not corpus size). Each iteration is one
-shuffle (two jobs under AQE: the map stage and the collect), so a cold
-build fires at most 1 + 2·KMEANS_ITERATIONS jobs; the returned
-assignment plan is map-only. (The previous broadcast-crossJoin
-formulation shuffled every vector's 64-double array ×K through a groupBy
-argmin: measured 5.2 s → 1.6 s at sf0.1 for the training loop; the
-(cluster, dim) posexplode aggregate that followed it needed a second
-shuffle per iteration, 10 build jobs instead of 7.)
+Two training paths, one result. The gate is plans/broadcast.
+fits_on_driver, the broadcast ceiling: a frame under it may be collected
+on the driver anyway.
 
-Build cost (driver→JVM): the centroid literal and the per-row argmin
-are each ONE SQL-text `F.expr` (functions/literals.py) instead of K·dims
-`F.lit` calls plus a Python lambda tree per iteration, and the per-
-coordinate means are one more. A cold build at sf0.01 (4-core VM,
-local[4]) went from about 14,000 py4j round trips and 10 jobs (build
-median 4.1 s) to about 500 round trips and 7 jobs (2.5 s), with
-identical rows. Persisting or repartitioning the training set as well
-measured slower in a prototype (3.0 s against 2.6 s): the scan is
-cheaper than the cache materialization.
+- Under the ceiling (every test scale factor and the perfbench corpus)
+  the training set is pulled once (one `toPandas` job) and Lloyd's runs
+  in numpy (_train_local). Its driver replicas of the SQL arithmetic,
+  _dist2_rows (a left fold over dims, as _DIST2_SQL) and _round6
+  (Spark's HALF_UP round on the shortest repr), give centroids
+  bit-identical to the Spark loop's; per-cluster sums are taken in
+  pulled row order, and the 6-dp rounding quantizes away their order.
+  Rows it does not replicate (a null or non-finite element, ragged
+  lengths) fall through to the Spark loop. At this size the Spark loop
+  is almost all framework overhead, a full query (two jobs) per
+  iteration over a few thousand vectors. A cold build fell from 7 jobs
+  and about 320 driver→JVM round trips to 1 job and about 135, and
+  training in a warm session from 1.2-1.6 s to 0.04-0.06 s at sf0.001
+  to sf0.1 (4-core VM, local[4]).
+- Above it (100 TB), _train_spark runs the same loop as queries. Per
+  iteration the corpus is touched once — the K·dims centroid table
+  rides into the plan as LITERALS (the parameter-server discipline of
+  stream_drift's fences; a bounded driver pull of K=8 rows per step,
+  nothing corpus-sized), so assignment is a pure map — per-row fold
+  over the centroid array, argmin via struct-ordered array_min, NO
+  shuffle and NO row amplification — followed by one partial-agg
+  shuffle keyed on the cluster alone, one `round(avg(emb[i]), 6)` per
+  coordinate (bounded by K per partition, not corpus size). Each
+  iteration is one shuffle (two jobs under AQE: the map stage and the
+  collect), so a cold build fires at most 1 + 2·KMEANS_ITERATIONS jobs.
+  The centroid literal and the per-row argmin are each ONE SQL-text
+  `F.expr` (functions/literals.py), and the per-coordinate means one
+  more.
+
+Either way the returned assignment plan is map-only: the trained
+centroids as a literal, the argmin per row.
 """
 
 from __future__ import annotations
 
+import decimal
+import math
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hedera_spark.functions.literals import double_array_sql
 from hedera_spark.operators.similarity import _dot
+from hedera_spark.plans.broadcast import fits_on_driver
 from hedera_spark.sources.tables import derived, load_table, table_state_key
 
 KMEANS_K = 8
@@ -139,9 +154,63 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _train(emb: DataFrame) -> list:
-    """The trained (cid, centroid) rows, [] for an empty corpus. Bounded
-    driver pulls throughout the loop: K rows, then K·1 rows of (cid,
-    64-double centroid) per iteration — never corpus-sized."""
+    """The trained (cid, centroid) rows, [] for an empty corpus. A
+    training set that fits on the driver (plans/broadcast.fits_on_driver)
+    is pulled once and trained by _train_local; one that does not, or
+    whose pulled rows the local loop cannot reproduce, by _train_spark."""
+    if fits_on_driver(emb):
+        cent_rows = _train_local(emb.toPandas())
+        if cent_rows is not None:
+            return cent_rows
+    return _train_spark(emb)
+
+
+def _train_local(pdf) -> list | None:
+    """Lloyd's in numpy over the pulled (vec_id, emb) rows, bit-identical
+    to _train_spark: the same init, the same rounded left-fold distances
+    (_dist2_rows), argmin ties to the smallest cid, and per-cluster sums
+    in pulled row order divided by the count and rounded, a cluster with
+    no members dropped as groupBy drops it. None when the rows are not
+    a finite, rectangular matrix under non-null ids (a null embedding or
+    element, NaN/inf, ragged lengths) or an iteration leaves the finite
+    range: those train in Spark, whose null and NaN ordering this loop
+    does not replicate."""
+    ids = pdf["vec_id"].to_numpy()
+    rows = pdf["emb"].tolist()
+    if pdf["vec_id"].isna().any() or any(r is None for r in rows):
+        return None
+    if len({len(r) for r in rows}) > 1:  # ragged
+        return None
+    if not rows:
+        return []
+    x = np.array(rows, dtype=np.float64)
+    if not np.isfinite(x).all():
+        return None
+    init = np.argsort(ids, kind="stable")[:KMEANS_K]
+    cids = ids[init]
+    cents = x[init]
+    for _ in range(KMEANS_ITERATIONS):
+        d2 = _dist2_rows(x, cents)
+        if not np.isfinite(d2).all():
+            return None
+        # cents stay sorted by cid, so the first minimum is the smallest cid
+        best = d2.argmin(axis=1)
+        n = np.bincount(best, minlength=len(cids))
+        sums = np.zeros_like(cents)
+        np.add.at(sums, best, x)
+        keep = n > 0
+        cids = cids[keep]
+        cents = _round6(sums[keep] / n[keep, None])
+        if not np.isfinite(cents).all():
+            return None
+    return [(int(cid), cemb.tolist()) for cid, cemb in zip(cids, cents)]
+
+
+def _train_spark(emb: DataFrame) -> list:
+    """Lloyd's as Spark queries, for a training set above the driver
+    ceiling. Bounded driver pulls throughout the loop: K rows, then K·1
+    rows of (cid, 64-double centroid) per iteration — never
+    corpus-sized."""
     cent_rows = [
         (r["vec_id"], r["emb"])
         for r in emb.orderBy("vec_id").limit(KMEANS_K).collect()
@@ -164,6 +233,61 @@ def _train(emb: DataFrame) -> list:
         )
         cent_rows = sorted((r["cid"], r["cemb"]) for r in new_cents)
     return cent_rows
+
+
+# --- driver replicas of the SQL arithmetic ------------------------------
+
+_Q6 = decimal.Decimal("0.000001")
+# wide enough to quantize the largest double (309 integer digits) exactly
+_HALF_UP = decimal.Context(prec=400, rounding=decimal.ROUND_HALF_UP)
+
+
+def _round6_half_up(x: float) -> float:
+    """Spark's round(double, 6) for one value: NaN and ±inf pass through,
+    else BigDecimal HALF_UP on the shortest decimal representation —
+    Decimal(repr(x)) is the Python equivalent (repr gives the same
+    shortest round-trip string as Double.toString). `+ 0.0` because a
+    BigDecimal has no negative zero: round(-0.0, 6) is 0.0."""
+    if not math.isfinite(x):
+        return x
+    return float(decimal.Decimal(repr(x)).quantize(_Q6, context=_HALF_UP)) + 0.0
+
+
+def _round6(a: np.ndarray) -> np.ndarray:
+    """_round6_half_up over a float64 array. Away from a half boundary
+    HALF_UP is floor(|x|·1e6 + 0.5)/1e6 with x's sign, and both the
+    scaled product's error and x's distance to its shortest repr are
+    far below the margin tested here; the division by 1e6 rounds
+    correctly, so it gives the double nearest the decimal result. Only
+    values within that margin of a half boundary, or too large for an
+    exact integer count of micro-units, take the exact path."""
+    a = np.asarray(a, dtype=np.float64)
+    with np.errstate(over="ignore", invalid="ignore"):
+        s = np.abs(a) * 1e6
+        n = np.floor(s + 0.5)
+        exact = (np.abs(s - np.floor(s) - 0.5) <= 1e-7 + s * 1e-14) | (s >= 1e15)
+    out = np.where(a < 0, -n, n) / 1e6 + 0.0
+    out[~np.isfinite(a)] = a[~np.isfinite(a)]
+    for i in zip(*np.nonzero(exact & np.isfinite(a))):
+        out[i] = _round6_half_up(float(a[i]))
+    return out
+
+
+def _dist2_rows(x: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """(len(x), len(c)) rounded squared distances between the rows of
+    two float64 matrices: the driver replica of _DIST2_SQL, a left fold
+    over the dims of (x−c)*(x−c) from 0.0 (not np.sum, which is
+    pairwise), then _round6."""
+    acc = np.zeros((x.shape[0], c.shape[0]))
+    for t in range(x.shape[1]):
+        diff = x[:, t, None] - c[None, :, t]
+        acc += diff * diff
+    return _round6(acc)
+
+
+def _py_dist2(a: list, b: list) -> float:
+    """_dist2_rows for one pair of vectors, as a float."""
+    return float(_dist2_rows(np.array([a], dtype=np.float64), np.array([b], dtype=np.float64))[0, 0])
 
 
 SEMDEDUP_COS = 0.4  # same cosine scale as the dedup_embedding family
@@ -312,29 +436,6 @@ CORESET_K = 8
 CORESET_POOL = 4 * CORESET_K  # candidates pulled per scan (pool refinement)
 
 
-def _round6_half_up(x: float) -> float:
-    """Spark's round(double, 6): BigDecimal HALF_UP on the shortest
-    decimal representation — Decimal(repr(x)) is the Python equivalent
-    (repr gives the same shortest round-trip string as Double.toString)."""
-    import decimal
-
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
-        )
-    )
-
-
-def _py_dist2(a: list, b: list) -> float:
-    """Driver-side replica of _DIST2_SQL: LEFT-FOLD summation order, then the
-    HALF_UP quantization — bit-identical to the column expression so pool
-    refinement ranks candidates on the same doubles the scan produced."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + (float(x) - float(y)) * (float(x) - float(y))
-    return _round6_half_up(acc)
-
-
 def _coreset_rows(spark: SparkSession, sf_dir: str):
     """coreset_maxmin's driver loop, returning (rows, n_scans) so the
     action-count test can assert the scan budget directly."""
@@ -382,6 +483,8 @@ def _coreset_rows(spark: SparkSession, sf_dir: str):
                 s = r["s"]
                 cur[s["nid"]] = (float(s["d"]), list(s["e"]))
                 scan_d[s["nid"]] = float(s["d"])
+            nids = list(cur)
+            pool_x = np.array([cur[nid][1] for nid in nids], dtype=np.float64)
             progressed = False
             degenerate = False
             while len(sel) < CORESET_K:
@@ -408,10 +511,10 @@ def _coreset_rows(spark: SparkSession, sf_dir: str):
                 sel.append((-best_nid, e))
                 rows.append((len(sel), -best_nid, v))
                 progressed = True
-                for nid, (d, ce) in cur.items():
-                    nd = _py_dist2(ce, e)
-                    if nd < d:
-                        cur[nid] = (nd, ce)
+                new_d = _dist2_rows(pool_x, np.array([e], dtype=np.float64))[:, 0]
+                for nid, nd in zip(nids, new_d.tolist()):
+                    if nd < cur[nid][0]:
+                        cur[nid] = (nd, cur[nid][1])
             if degenerate or (not progressed and thr is None):
                 break
         return rows, n_scans

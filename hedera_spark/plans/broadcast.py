@@ -1,5 +1,6 @@
-"""Size-gated broadcast: hint a join side only when the planner's own
-size estimate fits a ceiling.
+"""Size-gated broadcast and driver pulls: hint a join side, or collect
+a frame onto the driver, only when the planner's own size estimate fits
+a ceiling.
 
 A frame whose size grows with the corpus (a fixed fraction of it, or a
 Zipf tail of its vocabulary) is under a megabyte at the test scale
@@ -9,6 +10,12 @@ driver and every executor (Spark caps a broadcast at 8 GB). Above the
 ceiling the frame is returned unhinted, so the planner falls back to a
 shuffled join, which is memory-safe. Reading the estimate fires no Spark
 job.
+
+The same ceiling gates a driver pull (`fits_on_driver`): a broadcast is
+collected on the driver before it is sent out, so a frame under the
+ceiling may also be pulled and worked on there (k-means trains its
+centroids that way, operators/kmeans.py). Above it the caller keeps
+the work in Spark.
 """
 
 from __future__ import annotations
@@ -29,7 +36,11 @@ def plan_bytes(df: DataFrame) -> int:
     return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
 
 
+def fits_on_driver(df: DataFrame) -> bool:
+    """Whether `df`'s estimate is at most BROADCAST_MAX_BYTES."""
+    return plan_bytes(df) <= BROADCAST_MAX_BYTES
+
+
 def broadcast_if_fits(df: DataFrame) -> DataFrame:
-    """`F.broadcast(df)` when its estimate is at most BROADCAST_MAX_BYTES,
-    else `df` unchanged."""
-    return F.broadcast(df) if plan_bytes(df) <= BROADCAST_MAX_BYTES else df
+    """`F.broadcast(df)` when it fits_on_driver, else `df` unchanged."""
+    return F.broadcast(df) if fits_on_driver(df) else df

@@ -5,8 +5,10 @@ pays while its plan is being built, before any action runs.
   no footer-reading job, and a rewrite in place still re-infers. The
   stream-start schema probe shares that cache.
 - k-means writes its centroid literal and argmin as SQL text (one call
-  each, bit-exact doubles), so a cold build stays within a job budget
-  and a round-trip ceiling.
+  each, bit-exact doubles). A training set under the driver ceiling is
+  pulled in one job and trained on the driver; above it the Spark loop
+  stays within its job budget. A cold build stays under a round-trip
+  ceiling.
 - dedup_minhash's signature and LSH bands are SQL text too, under a
   round-trip ceiling of their own.
 - Everything derived from input files lives in one store keyed by file
@@ -208,23 +210,47 @@ def test_sql_text_literals_are_bit_exact(spark):
     assert [_bits(v) for v in row["arr"]] == [_bits(v) for v in _AWKWARD]
 
 
-def test_kmeans_build_job_budget(spark):
-    """A cold build: one init pull, then one shuffle (map stage + collect
-    job) per Lloyd iteration."""
+def _spark_trained_kmeans(monkeypatch) -> None:
+    """Force k-means onto its Spark loop: no training set fits a zero
+    driver ceiling."""
+    from hedera_spark.plans import broadcast
+
+    monkeypatch.setattr(broadcast, "BROADCAST_MAX_BYTES", 0)
+
+
+def test_kmeans_build_job_budget(spark, monkeypatch):
+    """A cold build on the Spark loop: one init pull, then one shuffle
+    (map stage + collect job) per Lloyd iteration."""
     from hedera_spark.operators.kmeans import KMEANS_ITERATIONS, kmeans_embeddings
     from hedera_spark.session import reset_session_state
     from hedera_spark.sources.tables import load_table
 
     reset_session_state(spark)
     load_table(spark, SF_DIR, "embeddings")  # schema cached: no load job below
+    _spark_trained_kmeans(monkeypatch)
     jobs = _jobs_fired(spark, lambda: kmeans_embeddings(spark, SF_DIR))
+    reset_session_state(spark)
     assert 1 <= jobs <= 1 + 2 * KMEANS_ITERATIONS
+
+
+def test_kmeans_trains_on_the_driver_in_one_job(spark):
+    """Under the driver ceiling a cold build pulls the training set once
+    and fires no other job; a build with the model stored fires none."""
+    from hedera_spark.operators.kmeans import kmeans_embeddings
+    from hedera_spark.session import reset_session_state
+    from hedera_spark.sources.tables import load_table
+
+    reset_session_state(spark)
+    load_table(spark, SF_DIR, "embeddings")  # schema cached: no load job below
+    assert _jobs_fired(spark, lambda: kmeans_embeddings(spark, SF_DIR)) == 1
+    assert _jobs_fired(spark, lambda: kmeans_embeddings(spark, SF_DIR)) == 0
 
 
 def test_kmeans_build_round_trip_ceiling(spark, monkeypatch):
     """Driver→JVM round trips for a cold build. Element-wise `F.lit`
-    centroids cost ~14k; the SQL-text literals about 500. Only the
-    building thread is counted, as for dedup_minhash below."""
+    centroids cost ~14k; the SQL-text literals about 320 with the Spark
+    loop, and training on the driver about 135. Only the building
+    thread is counted, as for dedup_minhash below."""
     import threading
 
     from py4j import clientserver
@@ -244,7 +270,7 @@ def test_kmeans_build_round_trip_ceiling(spark, monkeypatch):
     monkeypatch.setattr(clientserver.ClientServerConnection, "send_command", counting)
     kmeans_embeddings(spark, SF_DIR)
     monkeypatch.undo()
-    assert 0 < calls[0] <= 1500
+    assert 0 < calls[0] <= 200
 
 
 def test_dedup_minhash_build_round_trip_ceiling(spark, monkeypatch):
@@ -279,18 +305,20 @@ def test_dedup_minhash_build_round_trip_ceiling(spark, monkeypatch):
 # --- the derived store ------------------------------------------------
 
 
-def test_reset_retrains_models(spark):
+def test_reset_retrains_models(spark, monkeypatch):
     """reset_session_state drops trained models: the next k-means build
-    pays the init pull and every Lloyd iteration again, and the next
-    quality_classifier build its gradient steps, which a cache-only
-    clear (bench.py's score-only call) does not."""
+    pays the init pull and every Lloyd iteration again (on the Spark
+    loop), and the next quality_classifier build its gradient steps,
+    which a cache-only clear (bench.py's score-only call) does not."""
     from hedera_spark.operators.importance import LR_ITERATIONS, quality_classifier
     from hedera_spark.operators.kmeans import KMEANS_ITERATIONS, kmeans_embeddings
     from hedera_spark.session import reset_session_state
 
+    _spark_trained_kmeans(monkeypatch)
     kmeans_embeddings(spark, SF_DIR)
     reset_session_state(spark)
     assert _jobs_fired(spark, lambda: kmeans_embeddings(spark, SF_DIR)) >= 1 + 2 * KMEANS_ITERATIONS
+    monkeypatch.undo()
 
     quality_classifier(spark, SF_DIR)
     spark.catalog.clearCache()  # caches drop, model stays
@@ -299,6 +327,20 @@ def test_reset_retrains_models(spark):
     training = _jobs_fired(spark, lambda: quality_classifier(spark, SF_DIR))
     reset_session_state(spark)
     assert training >= scoring + LR_ITERATIONS
+
+
+def test_reset_retrains_models_on_the_driver(spark):
+    """The same under the driver ceiling: after a reset the next k-means
+    build pulls its training set again (one job); the build after it
+    finds the model stored (none)."""
+    from hedera_spark.operators.kmeans import kmeans_embeddings
+    from hedera_spark.session import reset_session_state
+
+    kmeans_embeddings(spark, SF_DIR)
+    reset_session_state(spark)
+    assert _jobs_fired(spark, lambda: kmeans_embeddings(spark, SF_DIR)) == 1
+    assert _jobs_fired(spark, lambda: kmeans_embeddings(spark, SF_DIR)) == 0
+    reset_session_state(spark)
 
 
 def test_reset_keeps_schemas_and_hot_page_stats(spark):
@@ -316,7 +358,8 @@ def test_reset_keeps_schemas_and_hot_page_stats(spark):
 
 def test_path_only_state_is_never_stored(spark, monkeypatch):
     """With every path unstat-able, nothing of any kind is stored: each
-    k-means build trains again, and the store is left as it was."""
+    k-means build trains again (on the Spark loop), and the store is
+    left as it was."""
     from hedera_spark.operators.importance import quality_classifier
     from hedera_spark.operators.kmeans import KMEANS_ITERATIONS, kmeans_embeddings
     from hedera_spark.operators.revisions import rev_pairs
@@ -325,6 +368,7 @@ def test_path_only_state_is_never_stored(spark, monkeypatch):
 
     reset_session_state(spark)
     monkeypatch.setattr(tables, "path_state_key", lambda path: (path,))
+    _spark_trained_kmeans(monkeypatch)
     for _ in range(2):
         jobs = _jobs_fired(spark, lambda: kmeans_embeddings(spark, SF_DIR))
         assert jobs >= 1 + 2 * KMEANS_ITERATIONS
@@ -333,6 +377,22 @@ def test_path_only_state_is_never_stored(spark, monkeypatch):
     rev_pairs(spark, SF_DIR)
     quality_classifier(spark, SF_DIR)
     reset_session_state(spark)
+    assert tables._DERIVED == before
+
+
+def test_path_only_state_retrains_on_the_driver(spark, monkeypatch):
+    """With every path unstat-able, each k-means build under the driver
+    ceiling reads the schema and pulls the training set again: two jobs
+    every time, nothing stored."""
+    from hedera_spark.operators.kmeans import kmeans_embeddings
+    from hedera_spark.session import reset_session_state
+    from hedera_spark.sources import tables
+
+    reset_session_state(spark)
+    monkeypatch.setattr(tables, "path_state_key", lambda path: (path,))
+    before = dict(tables._DERIVED)
+    for _ in range(2):
+        assert _jobs_fired(spark, lambda: kmeans_embeddings(spark, SF_DIR)) == 2
     assert tables._DERIVED == before
 
 

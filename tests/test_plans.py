@@ -648,3 +648,28 @@ def test_exchange_reuse_survives_a_prior_cache_leak_plus_reset(spark):
     assert "ReusedExchange" in executed_plan(df), (
         "anchor_cooccur: exchange reuse did not survive a leak + reset"
     )
+
+
+def test_plan_report_counts_only_the_final_adaptive_plan(spark):
+    """tools/gen_plan_report.py counts a plan's nodes. Training
+    quality_classifier materializes its persisted per-doc features, whose
+    adaptive plan then prints a Final and an Initial section; only the
+    Final plan ran, with two shuffles, and the query planned again with
+    its model stored counts the same."""
+    import importlib.util
+    import pathlib
+
+    from hedera_spark.operators.importance import quality_classifier
+    from hedera_spark.session import reset_session_state
+
+    path = pathlib.Path(__file__).resolve().parent.parent / "tools" / "gen_plan_report.py"
+    spec = importlib.util.spec_from_file_location("gen_plan_report", path)
+    report = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(report)
+
+    cold = formatted_plan(quality_classifier(spark, SF_DIR))
+    stored = formatted_plan(quality_classifier(spark, SF_DIR))
+    reset_session_state(spark)
+    assert "== Initial Plan ==" in cold
+    assert report._features(cold) == report._features(stored)
+    assert report._features(cold)["exchanges"] == 2

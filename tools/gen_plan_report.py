@@ -11,7 +11,10 @@ query plus fleet-wide totals.
 Counts come from `explain('formatted')`, where every physical node
 appears exactly once as a numbered "(n) NodeName" line (the raw
 executedPlan string repeats cached subtrees and spells codegen as
-"*(n)" prefixes, which double-counts).
+"*(n)" prefixes, which double-counts). An adaptive plan that has run
+(a persisted frame materialized while the query was built) prints a
+Final and an Initial plan; only the Final plan, the one that ran, is
+counted.
 
 Usage: python tools/gen_plan_report.py  (plans at sf0.001; iterative
 operators execute their bounded driver loops while planning, so the
@@ -50,8 +53,32 @@ COLS = [
 ]
 
 
+def _initial_only_ids(plan: str) -> set[str]:
+    """Ids of the nodes that appear only under an `== Initial Plan ==`
+    marker of the plan tree. A section holds the lines indented deeper
+    than its marker; leaves the Final plan shares (the scans) keep
+    their id there."""
+    ids = {"Initial": set(), "Final": set()}
+    section, col = None, 0
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" "))
+        marker = re.search(r"== (Initial|Final) Plan ==", line)
+        if marker:
+            section, col = marker.group(1), indent
+        elif section and indent > col:
+            ids[section].update(re.findall(r" \((\d+)\)", line))
+        else:
+            section = None
+    return ids["Initial"] - ids["Final"]
+
+
 def _features(plan: str) -> dict[str, int]:
-    nodes = Counter(re.findall(r"^\(\d+\) (\w+)", plan, re.M))
+    # one block per node: its "(n) NodeName" line and the details under it
+    skip = _initial_only_ids(plan)
+    heads = [(re.match(r"\((\d+)\) (\w+)", b), b) for b in re.split(r"\n(?=\(\d+\) )", plan)]
+    kept = [(m.group(2), b) for m, b in heads if m and m.group(1) not in skip]
+    blocks = [b for _, b in kept]
+    nodes = Counter(name for name, _ in kept)
     return {
         "exchanges": nodes["Exchange"],
         "bhj": nodes["BroadcastHashJoin"],
@@ -59,10 +86,10 @@ def _features(plan: str) -> dict[str, int]:
         "shj": nodes["ShuffledHashJoin"],
         "bnlj": nodes["BroadcastNestedLoopJoin"],
         "cartesian": nodes["CartesianProduct"],
-        "codegen": len(set(re.findall(r"\[codegen id : (\d+)\]", plan))),
+        "codegen": len({m for b in blocks for m in re.findall(r"\[codegen id : (\d+)\]", b)}),
         "python": sum(nodes[n] for n in PY_NODES),
         "expand": nodes["Expand"],
-        "pushed_scans": len(re.findall(r"PushedFilters: \[[^\]]", plan)),
+        "pushed_scans": sum(bool(re.search(r"PushedFilters: \[[^\]]", b)) for b in blocks),
     }
 
 
@@ -93,7 +120,8 @@ def main() -> None:
         f.write("# PLANS — physical-plan quality report\n\n")
         f.write(
             "Generated by tools/gen_plan_report.py at sf0.001 — do not "
-            "edit.\nPer-plan node counts from `explain('formatted')`: "
+            "edit.\nPer-plan node counts from `explain('formatted')` (of "
+            "an adaptive plan that has run, the Final plan only): "
             "shuffles (Exchange), join strategies (broadcast-hash / "
             "sort-merge / shuffled-hash / broadcast-nested-loop / "
             "cartesian), whole-stage-codegen span count, Python/Arrow "
