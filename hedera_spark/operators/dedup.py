@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hedera_spark.functions.ngrams import ngram_sql
+from hedera_spark.functions.vectors import bits_sql
 from hedera_spark.plans.broadcast import broadcast_if_fits, plan_bytes
 from hedera_spark.sources.tables import load_table
 
@@ -407,6 +408,11 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# bit j of the fingerprint: a strict majority of the n shingle hashes
+# has bit j set (a tie, 2·b == n, leaves it clear)
+_SIMHASH_SQL = f"CAST({bits_sql(f'b{j} * 2 > n' for j in range(SIMHASH_BITS))} AS BIGINT)"
+
+
 def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """doc_id -> 60-bit SimHash over distinct word-trigram shingles. Bit j
     of the fingerprint is the majority vote of bit j across shingle hashes
@@ -424,17 +430,10 @@ def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one wide aggregation (60 bit-vote sums + count) instead of a 60x row
     # explode: same single shuffle keyed on doc_id, 1/60th the shuffle rows
     votes = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.expr(f"(h >> {j}) & 1")).alias(f"b{j}")
-            for j in range(SIMHASH_BITS)
-        ],
+        F.expr("count(1) AS n"),
+        *[F.expr(f"sum((h >> {j}) & 1) AS b{j}") for j in range(SIMHASH_BITS)],
     )
-    fingerprint_expr = None
-    for j in range(SIMHASH_BITS):
-        term = F.when(F.col(f"b{j}") * 2 > F.col("n"), F.lit(1 << j)).otherwise(F.lit(0))
-        fingerprint_expr = term if fingerprint_expr is None else fingerprint_expr + term
-    return votes.select("doc_id", fingerprint_expr.cast("bigint").alias("simhash"))
+    return votes.selectExpr("doc_id", f"{_SIMHASH_SQL} AS simhash")
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,7 +25,7 @@ on the driver anyway.
 - Under the ceiling (every test scale factor and the perfbench corpus)
   the training set is pulled once (one `toPandas` job) and Lloyd's runs
   in numpy (_train_local). Its driver replicas of the SQL arithmetic,
-  _dist2_rows (a left fold over dims, as _DIST2_SQL) and _round6
+  _dist2_rows (a left fold over dims, as vectors.l2sq_sql) and _round6
   (Spark's HALF_UP round on the shortest repr), give centroids
   bit-identical to the Spark loop's; per-cluster sums are taken in
   pulled row order, and the 6-dp rounding quantizes away their order.
@@ -65,24 +65,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hedera_spark.functions.literals import double_array_sql
-from hedera_spark.operators.similarity import _dot
+from hedera_spark.functions.vectors import cos_sql, l2sq_sql, norm_sql
 from hedera_spark.plans.broadcast import fits_on_driver
 from hedera_spark.sources.tables import derived, load_table, table_state_key
 
 KMEANS_K = 8
 KMEANS_ITERATIONS = 3
-
-
-# Rounded squared euclidean distance between the row's `emb` and the
-# centroid lambda variable `c`, as SQL text: a sequential fold of double
-# products from a 0.0D seed (a bare 0.0 is a DECIMAL in Spark SQL),
-# quantized to 6 decimals so both engines rank candidates on identical
-# doubles.
-_DIST2_SQL = (
-    "round(aggregate(zip_with(emb, c.cemb, (x, y) -> "
-    "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-    "0.0D, (acc, v) -> acc + v), 6)"
-)
 
 
 def _cent_lit(cent_rows) -> str:
@@ -102,12 +90,13 @@ def _assign(emb: DataFrame, cent_rows) -> DataFrame:
     """(vec_id, emb, cluster_id, dist2): nearest centroid per vector —
     pure map: per-row fold over the literal centroid array, argmin via
     struct-ordered array_min (ties to the smallest centroid id). No
-    shuffle, no row amplification. The argmin is one SQL expression
-    (one driver→JVM call), computed once per row into `best`, whose two
-    fields are then projected."""
+    shuffle, no row amplification. The distance is quantized to 6
+    decimals so both engines rank candidates on identical doubles. The
+    argmin is one SQL expression (one driver→JVM call), computed once per
+    row into `best`, whose two fields are then projected."""
     best = F.expr(
         f"array_min(transform({_cent_lit(cent_rows)}, "
-        f"c -> named_struct('d', {_DIST2_SQL}, 'c', c.cid)))"
+        f"c -> named_struct('d', round({l2sq_sql('emb', 'c.cemb')}, 6), 'c', c.cid)))"
     )
     return emb.select("vec_id", "emb", best.alias("best")).select(
         "vec_id",
@@ -275,7 +264,8 @@ def _round6(a: np.ndarray) -> np.ndarray:
 
 def _dist2_rows(x: np.ndarray, c: np.ndarray) -> np.ndarray:
     """(len(x), len(c)) rounded squared distances between the rows of
-    two float64 matrices: the driver replica of _DIST2_SQL, a left fold
+    two float64 matrices: the driver replica of the rounded
+    vectors.l2sq_sql distance the argmins use, a left fold
     over the dims of (x−c)*(x−c) from 0.0 (not np.sum, which is
     pairwise), then _round6."""
     acc = np.zeros((x.shape[0], c.shape[0]))
@@ -309,11 +299,9 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     + the exact cosine residual on candidates; never an all-pairs
     operator. At 100 TB, K scales with corpus so cluster occupancy
     stays bounded."""
-    from hedera_spark.operators.similarity import _norm
-
     assign = kmeans_embeddings(spark, sf_dir).select("vec_id", "cluster_id")
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
+    emb = load_table(spark, sf_dir, "embeddings").selectExpr(
+        "vec_id", "embedding", f"{norm_sql('embedding')} AS nrm"
     )
     j = assign.join(emb, "vec_id")
     b = j.select(
@@ -324,14 +312,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dropped = (
         j.join(b, (F.col("cluster_id") == F.col("cl_b")) & (F.col("vec_id") < F.col("vec_b")))
-        .where(
-            F.round(
-                _dot(F.col("embedding"), F.col("emb_b"))
-                / (F.col("nrm") * F.col("nrm_b")),
-                6,
-            )
-            >= SEMDEDUP_COS
-        )
+        .where(F.expr(cos_sql("embedding", "emb_b", "nrm", "nrm_b")) >= SEMDEDUP_COS)
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()
         .withColumn("is_semantic_dup", F.lit(1))
@@ -397,18 +378,7 @@ def kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dist = pts.crossJoin(
         F.broadcast(cents.select(F.col("cluster_id").alias("cid"), "cemb"))
-    ).select(
-        "vec_id",
-        "cluster_id",
-        "cid",
-        F.sqrt(
-            F.aggregate(
-                F.zip_with("emb", "cemb", lambda x, c: (x - c) * (x - c)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ).alias("d"),
-    )
+    ).selectExpr("vec_id", "cluster_id", "cid", f"sqrt({l2sq_sql('emb', 'cemb')}) AS d")
     ab = dist.groupBy("vec_id", "cluster_id").agg(
         F.max(F.when(F.col("cid") == F.col("cluster_id"), F.col("d"))).alias("a"),
         F.min(F.when(F.col("cid") != F.col("cluster_id"), F.col("d"))).alias("b"),
@@ -455,7 +425,9 @@ def _coreset_rows(spark: SparkSession, sf_dir: str):
         rows = [(1, seed[0]["vec_id"], None)]
         n_scans = 0
         while len(sel) < CORESET_K:
-            mind = F.expr(f"array_min(transform({_cent_lit(sel)}, c -> {_DIST2_SQL}))")
+            mind = F.expr(
+                f"array_min(transform({_cent_lit(sel)}, c -> round({l2sq_sql('emb', 'c.cemb')}, 6)))"
+            )
             key = F.struct(
                 mind.alias("d"), (-F.col("vec_id")).alias("nid"), F.col("emb").alias("e")
             )
@@ -533,7 +505,7 @@ def coreset_maxmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve (asserted by test).
 
     Determinism: seed = the smallest vec_id; every step takes argmax of
-    the per-vector min rounded distance (the kmeans _DIST2_SQL quantization)
+    the per-vector min rounded distance (the k-means argmin's quantization)
     with ties to the smallest vec_id — identical in the unrolled
     DuckDB oracle (ORDER BY mind DESC, vec_id LIMIT 1, with the same
     already-selected-at-distance-0 stop).

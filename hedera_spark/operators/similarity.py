@@ -3,7 +3,7 @@
 Brute-force cosine top-k is the correctness baseline; sign-LSH bucketing is
 the scale path (each probe touches ~1/2^planes of the corpus). Everything
 is built-in-function arithmetic: dot products are explicit *sequential*
-folds (`aggregate(zip_with(...))`) over doubles so the oracle (DuckDB
+folds over doubles (functions/vectors.py) so the oracle (DuckDB
 `list_reduce`) reproduces bit-identical sums — that determinism is what
 lets an approximate structure be hash-checked exactly.
 
@@ -22,7 +22,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hedera_spark.functions.literals import double_array
+from hedera_spark.functions.vectors import cos_sql, dot_sql, l2sq_sql, norm_sql, sign_bucket_sql
 from hedera_spark.plans.broadcast import broadcast_if_fits
 from hedera_spark.sources.tables import load_table
 
@@ -70,60 +70,52 @@ def table_planes(t: int) -> list[list[float]]:
     ]
 
 
-def _dot(a, b) -> Column:
-    """Sequential left-to-right fold of the element products (doubles)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
+# SQL text shared by the scorers below (functions/vectors.py)
+_NRM = f"{norm_sql('embedding')} AS nrm"
+_COS = f"{cos_sql('q_emb', 'embedding', 'q_nrm', 'nrm')} AS cos"
+_PAIR_COS = f"{cos_sql('embedding', 'emb_b', 'nrm', 'nrm_b')} AS cos"
+_BUCKET = f"{sign_bucket_sql('embedding', PLANES)} AS bucket"
+
+
+def _rebalanced(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """The embeddings table spread over every core, projected to `cols`
+    (SQL text). The fold dot products are CPU-dense per row, and a
+    compact input would pin them to one core per input split (see
+    dedup._shingles)."""
+    return (
+        load_table(spark, sf_dir, "embeddings")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .selectExpr(*cols)
     )
 
 
-def _norm(a) -> Column:
-    return F.sqrt(_dot(a, a))
+def _queries(emb: DataFrame, *cols: str) -> DataFrame:
+    """(q_id, q_emb, q_nrm, *cols): the query subset (vec_id % QUERY_MOD
+    == 0) of a (vec_id, embedding, nrm, ...) frame."""
+    return emb.selectExpr(
+        "vec_id AS q_id", "embedding AS q_emb", "nrm AS q_nrm", *cols
+    ).where(f"q_id % {QUERY_MOD} = 0")
 
 
-def _with_bucket(df: DataFrame) -> DataFrame:
-    """Append the sign-LSH bucket id: bit p = (v · plane_p) > 0."""
-    bucket = F.lit(0)
-    for p, plane in enumerate(PLANES):
-        lit_plane = double_array(plane)
-        bucket = bucket + F.when(
-            _dot(F.col("embedding"), lit_plane) > 0, F.lit(1 << p)
-        ).otherwise(F.lit(0))
-    return df.withColumn("bucket", bucket)
+def _scored(pairs: DataFrame) -> DataFrame:
+    """(q_id, neighbor_id, cos) of (query, corpus) pairs."""
+    return pairs.selectExpr("q_id", "vec_id AS neighbor_id", _COS)
+
+
+def top_k_per_query(scored: DataFrame, k: int, order: str = "cos DESC") -> DataFrame:
+    """`scored` plus rk (bigint), each row's rank within its q_id by
+    `order` with ties to the smaller neighbor_id, cut at rk <= k."""
+    rk = f"row_number() OVER (PARTITION BY q_id ORDER BY {order}, neighbor_id)"
+    return scored.withColumn("rk", F.expr(f"CAST({rk} AS BIGINT)")).where(f"rk <= {k}")
 
 
 def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-5 neighbors for the query subset
-    (vec_id % 25 == 0). Queries are broadcast; the corpus is scanned once.
-    The corpus scan is rebalanced to full parallelism first: the fold-based
-    dot products are CPU-dense per row and a compact input would pin them
-    to one core per input split (see dedup._shingles)."""
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    ).select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
-    q = emb.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    ).where(F.col("q_id") % QUERY_MOD == 0)
-    pairs = emb.join(broadcast_if_fits(q), F.col("vec_id") != F.col("q_id"))
-    scored = pairs.select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            _dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")),
-            6,
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= TOPK)
-    )
+    (vec_id % 25 == 0). Queries are broadcast; the corpus is scanned
+    once, rebalanced to full parallelism first."""
+    emb = _rebalanced(spark, sf_dir, "vec_id", "embedding", _NRM)
+    pairs = emb.join(broadcast_if_fits(_queries(emb)), F.col("vec_id") != F.col("q_id"))
+    return top_k_per_query(_scored(pairs), TOPK)
 
 
 def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,30 +123,11 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     so each probe touches ~1/256 of the corpus — the 100 TB path. Same
     scoring math as ann_topk; recall is the tunable (more tables / fewer
     planes => higher recall). Corpus scan rebalanced as in ann_topk."""
-    emb = _with_bucket(
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", "embedding")
-    ).select("vec_id", "embedding", "bucket", _norm(F.col("embedding")).alias("nrm"))
-    q = emb.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        "bucket",
-    ).where(F.col("q_id") % QUERY_MOD == 0)
-    pairs = emb.join(broadcast_if_fits(q), "bucket").where(F.col("vec_id") != F.col("q_id"))
-    scored = pairs.select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            _dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")),
-            6,
-        ).alias("cos"),
+    emb = _rebalanced(spark, sf_dir, "vec_id", "embedding", _BUCKET, _NRM)
+    pairs = emb.join(broadcast_if_fits(_queries(emb, "bucket")), "bucket").where(
+        F.col("vec_id") != F.col("q_id")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w).cast("long")).where(
-        F.col("rk") <= LSH_TOPK
-    )
+    return top_k_per_query(_scored(pairs), LSH_TOPK)
 
 
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,26 +135,11 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale the candidate set comes from the ann_lsh buckets instead of
     the full cross join — this operator is the correctness baseline.
     Left side rebalanced to full parallelism (n^2/2 fold dot products)."""
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    ).select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
-    b = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("emb_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
+    emb = _rebalanced(spark, sf_dir, "vec_id", "embedding", _NRM)
+    b = emb.selectExpr("vec_id AS vec_b", "embedding AS emb_b", "nrm AS nrm_b")
     return (
         emb.join(b, F.col("vec_id") < F.col("vec_b"))
-        .select(
-            F.col("vec_id").alias("vec_a"),
-            "vec_b",
-            F.round(
-                _dot(F.col("embedding"), F.col("emb_b")) / (F.col("nrm") * F.col("nrm_b")),
-                6,
-            ).alias("cos"),
-        )
+        .selectExpr("vec_id AS vec_a", "vec_b", _PAIR_COS)
         .where(F.col("cos") >= COS_THRESHOLD)
     )
 
@@ -197,31 +155,19 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair CAN straddle a hyperplane — dedup_embedding is the exact
     baseline; tests assert this returns a subset of it with planted
     near-identical vectors recovered."""
-    emb = _with_bucket(
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", "embedding")
-    ).select("vec_id", "embedding", "bucket", _norm(F.col("embedding")).alias("nrm"))
-    b = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("emb_b"),
-        F.col("nrm").alias("nrm_b"),
-        "bucket",
-    )
     return (
-        emb.join(b, "bucket")
-        .where(F.col("vec_id") < F.col("vec_b"))
-        .select(
-            F.col("vec_id").alias("vec_a"),
-            "vec_b",
-            F.round(
-                _dot(F.col("embedding"), F.col("emb_b"))
-                / (F.col("nrm") * F.col("nrm_b")),
-                6,
-            ).alias("cos"),
-        )
+        _bucket_pairs(spark, sf_dir)
+        .selectExpr("vec_id AS vec_a", "vec_b", _PAIR_COS)
         .where(F.col("cos") >= COS_THRESHOLD)
     )
+
+
+def _bucket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every vector pair (vec_id < vec_b) sharing the 8-bit sign-LSH
+    bucket, with both embeddings and norms."""
+    emb = _rebalanced(spark, sf_dir, "vec_id", "embedding", _BUCKET, _NRM)
+    b = emb.selectExpr("vec_id AS vec_b", "embedding AS emb_b", "nrm AS nrm_b", "bucket")
+    return emb.join(b, "bucket").where(F.col("vec_id") < F.col("vec_b"))
 
 
 CENTROID_MOD = 50  # vec_id % 50 == 1 -> coarse-quantizer centroid set
@@ -237,22 +183,9 @@ def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The argmax is `max_by` over a (score, -cid) struct: a partial-agg
     groupBy, not a window — no per-vector sort at scale."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
-    )
-    cents = emb.where(F.col("vec_id") % CENTROID_MOD == 1).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cemb"),
-        F.col("nrm").alias("cnrm"),
-    )
-    scored = emb.crossJoin(F.broadcast(cents)).withColumn(
-        "cscore",
-        F.round(
-            _dot(F.col("embedding"), F.col("cemb")) / (F.col("nrm") * F.col("cnrm")),
-            6,
-        ),
+    emb = _rebalanced(spark, sf_dir, "vec_id", "embedding", _NRM)
+    scored = emb.crossJoin(F.broadcast(_centroids(emb))).withColumn(
+        "cscore", F.expr(cos_sql("embedding", "cemb", "nrm", "cnrm"))
     )
     return scored.groupBy("vec_id").agg(
         F.max_by(
@@ -260,6 +193,14 @@ def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cid"),
         F.first("embedding").alias("embedding"),
         F.first("nrm").alias("nrm"),
+    )
+
+
+def _centroids(emb: DataFrame) -> DataFrame:
+    """(cid, cemb, cnrm): the sampled centroid set (vec_id % CENTROID_MOD
+    == 1) of a (vec_id, embedding, nrm) frame."""
+    return emb.where(F.col("vec_id") % CENTROID_MOD == 1).selectExpr(
+        "vec_id AS cid", "embedding AS cemb", "nrm AS cnrm"
     )
 
 
@@ -275,40 +216,27 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange reuse cannot fire — the ann_candidate_volume lesson).
     # Released by the session-level cache reset.
     cells = _ivf_cells(spark, sf_dir).persist()
-    q = cells.where(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        "cid",
-    )
-    pairs = q.join(cells, "cid").where(F.col("vec_id") != F.col("q_id"))
-    scored = pairs.select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            _dot(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_nrm") * F.col("nrm")),
-            6,
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w).cast("long")).where(
-        F.col("rk") <= IVF_TOPK
-    )
+    pairs = _queries(cells, "cid").join(cells, "cid").where(F.col("vec_id") != F.col("q_id"))
+    return top_k_per_query(_scored(pairs), IVF_TOPK)
 
 
-def _with_table_buckets(df: DataFrame) -> DataFrame:
-    """Append bucket_t for every hash table (bit p of bucket_t =
-    sign(v · plane_{t,p}))."""
-    for t in range(N_TABLES):
-        bucket = F.lit(0)
-        for p, plane in enumerate(table_planes(t)):
-            lit_plane = double_array(plane)
-            bucket = bucket + F.when(
-                _dot(F.col("embedding"), lit_plane) > 0, F.lit(1 << p)
-            ).otherwise(F.lit(0))
-        df = df.withColumn(f"bucket_{t}", bucket)
-    return df
+# (vec_id, bks): the vector's bucket in each of the N_TABLES hash tables
+_TABLE_BUCKETS = "array({}) AS bks".format(
+    ", ".join(sign_bucket_sql("embedding", table_planes(t)) for t in range(N_TABLES))
+)
+
+
+def _table_bucket_rows(emb: DataFrame) -> DataFrame:
+    """(vec_id, t, bucket): one narrow row per vector and hash table, no
+    payload."""
+    return (
+        emb.selectExpr("vec_id", _TABLE_BUCKETS)
+        .selectExpr(
+            "vec_id",
+            f"explode(transform(sequence(0, {N_TABLES - 1}), t -> struct(t, bks[t] AS b))) AS tb",
+        )
+        .selectExpr("vec_id", "tb.t AS t", "tb.b AS bucket")
+    )
 
 
 def ann_lsh_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,23 +254,9 @@ def ann_lsh_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide vectors the scoring and shuffle width dominate, so the deduped
     form is the shipped shape (test_plans pins score-after-dedup: no
     max(cos) aggregate may reappear)."""
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    ).select("vec_id", "embedding")
-    bucketed = _with_table_buckets(emb).select(
-        "vec_id",
-        F.array(*[F.col(f"bucket_{t}") for t in range(N_TABLES)]).alias("bks"),
-    )
-    # (vec_id, t, bucket) — narrow candidate rows, no payload
-    tb = F.explode(
-        F.expr(f"transform(sequence(0, {N_TABLES - 1}), t -> struct(t, bks[t] AS b))")
-    )
-    eb = bucketed.select("vec_id", tb.alias("tb")).select(
-        "vec_id", F.col("tb.t").alias("t"), F.col("tb.b").alias("bucket")
-    )
-    qk = eb.select(F.col("vec_id").alias("q_id"), "t", "bucket").where(
-        F.col("q_id") % QUERY_MOD == 0
-    )
+    emb = _rebalanced(spark, sf_dir, "vec_id", "embedding")
+    eb = _table_bucket_rows(emb)
+    qk = eb.selectExpr("vec_id AS q_id", "t", "bucket").where(f"q_id % {QUERY_MOD} = 0")
     cand = (
         eb.join(broadcast_if_fits(qk), ["t", "bucket"])
         .where(F.col("vec_id") != F.col("q_id"))
@@ -350,29 +264,9 @@ def ann_lsh_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # join the embeddings back: one scoring row per distinct pair
-    nemb = emb.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
-    qemb = nemb.where(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    scored = (
-        cand.join(nemb, "vec_id")
-        .join(broadcast_if_fits(qemb), "q_id")
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("q_emb"), F.col("embedding"))
-                / (F.col("q_nrm") * F.col("nrm")),
-                6,
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w).cast("long")).where(
-        F.col("rk") <= LSH_TOPK
-    )
+    nemb = emb.selectExpr("vec_id", "embedding", _NRM)
+    pairs = cand.join(nemb, "vec_id").join(broadcast_if_fits(_queries(nemb)), "q_id")
+    return top_k_per_query(_scored(pairs), LSH_TOPK)
 
 
 def _exact_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,21 +350,6 @@ PQ_K = 32  # codebook entries per subspace — FIXED size, independent of
 # PQ codebook is fixed-size regardless of training-set size
 
 
-def _l2sq(a, b) -> Column:
-    """Squared L2 distance as a sequential left fold (cross-engine exact:
-    float->double casts, fixed order, no rounding needed)."""
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
-
-
 def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ approximate top-3 (Jegou et al. 2011, "Product Quantization
     for Nearest Neighbor Search"): vectors are compressed to PQ_M
@@ -509,12 +388,8 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "m",
         F.slice("cemb", F.col("m") * PQ_DIM + 1, PQ_DIM).alias("csub"),
     )
-    scored = subs.join(F.broadcast(csubs), "m").select(
-        "vec_id",
-        "m",
-        "ccid",
-        "csub",
-        _l2sq(F.col("subv"), F.col("csub")).alias("d"),
+    scored = subs.join(F.broadcast(csubs), "m").selectExpr(
+        "vec_id", "m", "ccid", "csub", f"{l2sq_sql('subv', 'csub')} AS d"
     )
     best = scored.groupBy("vec_id", "m").agg(
         F.min_by(
@@ -536,15 +411,10 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = cells.select("vec_id", "cid").join(recon, "vec_id")
     pairs = q.join(cand, "cid").where(F.col("vec_id") != F.col("q_id"))
-    scored_q = pairs.select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(_l2sq(F.col("q_emb"), F.col("recon")), 6).alias("adist"),
+    scored_q = pairs.selectExpr(
+        "q_id", "vec_id AS neighbor_id", f"round({l2sq_sql('q_emb', 'recon')}, 6) AS adist"
     )
-    w = Window.partitionBy("q_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return scored_q.withColumn("rk", F.row_number().over(w).cast("long")).where(
-        F.col("rk") <= IVF_TOPK
-    )
+    return top_k_per_query(scored_q, IVF_TOPK, "adist")
 
 
 def pq_recall(
@@ -576,32 +446,12 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     second scan). Queries whose label has no second member (no possible
     positive) are dropped by the non-null filter, matching the oracle's
     inner joins."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            "vec_id",
-            "embedding",
-            "label",
-            _norm(F.col("embedding")).alias("nrm"),
-        )
-    )
-    q = emb.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("label").alias("q_label"),
-        F.col("nrm").alias("q_nrm"),
-    ).where(F.col("q_id") % QUERY_MOD == 0)
-    scored = emb.join(broadcast_if_fits(q), F.col("vec_id") != F.col("q_id")).select(
-        "q_id",
-        "q_label",
-        "vec_id",
-        "label",
-        F.round(
-            _dot(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_nrm") * F.col("nrm")),
-            6,
-        ).alias("cos"),
+    emb = _rebalanced(spark, sf_dir, "vec_id", "embedding", "label", _NRM)
+    q = emb.selectExpr(
+        "vec_id AS q_id", "embedding AS q_emb", "label AS q_label", "nrm AS q_nrm"
+    ).where(f"q_id % {QUERY_MOD} = 0")
+    scored = emb.join(broadcast_if_fits(q), F.col("vec_id") != F.col("q_id")).selectExpr(
+        "q_id", "q_label", "vec_id", "label", _COS
     )
     same = F.col("label") == F.col("q_label")
     rank = F.struct(F.col("cos").alias("c"), (-F.col("vec_id")).alias("t"))
@@ -676,7 +526,7 @@ def _sq_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sequence(F.lit(1), F.lit(EMB_DIM)), recon_elem
         ).alias("remb"),
     )
-    return recon.select("vec_id", "remb", _norm(F.col("remb")).alias("rnrm"))
+    return recon.selectExpr("vec_id", "remb", f"{norm_sql('remb')} AS rnrm")
 
 
 def ann_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -695,27 +545,14 @@ def ann_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer analog of the PQ codebook); encode/decode are map-side;
     the probe itself is the labeled brute-force baseline shape (queries
     broadcast, corpus scanned once)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
-    q = emb.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    ).where(F.col("q_id") % QUERY_MOD == 0)
+    emb = load_table(spark, sf_dir, "embeddings").selectExpr("vec_id", "embedding", _NRM)
     recon = _sq_recon(spark, sf_dir)
-    scored = recon.join(broadcast_if_fits(q), F.col("vec_id") != F.col("q_id")).select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            _dot(F.col("q_emb"), F.col("remb")) / (F.col("q_nrm") * F.col("rnrm")),
-            6,
-        ).alias("cos"),
+    scored = recon.join(
+        broadcast_if_fits(_queries(emb)), F.col("vec_id") != F.col("q_id")
+    ).selectExpr(
+        "q_id", "vec_id AS neighbor_id", f"{cos_sql('q_emb', 'remb', 'q_nrm', 'rnrm')} AS cos"
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w).cast("long")).where(
-        F.col("rk") <= SQ_TOPK
-    )
+    return top_k_per_query(scored, SQ_TOPK)
 
 
 def sq_recall(
@@ -775,11 +612,7 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c")
         )
     )
-    d2 = F.aggregate(
-        F.zip_with("v", "c", lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
+    d2 = F.expr(l2sq_sql("v", "c"))
     di = (
         vint.join(F.broadcast(cent), "label")
         .select(
@@ -833,31 +666,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     via an array filter + explode (map-side), and both statistics are
     bounded by |candidates|·|thresholds|. The drop count is a distinct
     per threshold — computed as a two-level aggregate, no Expand."""
-    emb = _with_bucket(
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", "embedding")
-    ).select(
-        "vec_id", "embedding", "bucket", _norm(F.col("embedding")).alias("nrm")
-    )
-    b = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("emb_b"),
-        F.col("nrm").alias("nrm_b"),
-        "bucket",
-    )
-    pairs = (
-        emb.join(b, "bucket")
-        .where(F.col("vec_id") < F.col("vec_b"))
-        .select(
-            "vec_b",
-            F.round(
-                _dot(F.col("embedding"), F.col("emb_b"))
-                / (F.col("nrm") * F.col("nrm_b")),
-                6,
-            ).alias("cos"),
-        )
-    )
+    pairs = _bucket_pairs(spark, sf_dir).selectExpr("vec_b", _PAIR_COS)
     t_arr = F.array(*[F.lit(float(t)) for t in SWEEP_THRESHOLDS])
     tagged = pairs.select(
         "vec_b",
@@ -926,11 +735,6 @@ def label_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _cos(vec: str, cen_col: str) -> Column:
-        dot = (
-            f"aggregate(zip_with({vec}, {cen_col},"
-            " (a, b) -> CAST(a AS DOUBLE) * b), CAST(0.0 AS DOUBLE),"
-            " (acc, x) -> acc + x)"
-        )
         n1 = (
             f"aggregate({vec}, CAST(0.0 AS DOUBLE),"
             " (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
@@ -939,7 +743,7 @@ def label_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"aggregate({cen_col}, CAST(0.0 AS DOUBLE),"
             " (acc, x) -> acc + x * x)"
         )
-        return F.expr(f"{dot} / (sqrt({n1}) * sqrt({n2}))")
+        return F.expr(f"{dot_sql(vec, cen_col)} / (sqrt({n1}) * sqrt({n2}))")
 
     scored = (
         emb.join(F.broadcast(cen), "label")
@@ -1019,34 +823,13 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid map-side ops; candidates are cell-equality joins (a vector
     sits in exactly one cell, so probes never duplicate candidates);
     everything after is |queries|-bounded."""
-    dp = spark.sparkContext.defaultParallelism
     cells = _ivf_cells(spark, sf_dir).persist()
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(dp)
-        .select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
-    )
-    cents = emb.where(F.col("vec_id") % CENTROID_MOD == 1).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cemb"),
-        F.col("nrm").alias("cnrm"),
-    )
-    q = cells.where(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
+    cents = _centroids(_rebalanced(spark, sf_dir, "vec_id", "embedding", _NRM))
+    q = _queries(cells)
     wq = Window.partitionBy("q_id").orderBy(F.desc("cscore"), F.asc("cid"))
     qrank = (
         q.crossJoin(F.broadcast(cents))
-        .withColumn(
-            "cscore",
-            F.round(
-                _dot(F.col("q_emb"), F.col("cemb"))
-                / (F.col("q_nrm") * F.col("cnrm")),
-                6,
-            ),
-        )
+        .withColumn("cscore", F.expr(cos_sql("q_emb", "cemb", "q_nrm", "cnrm")))
         .select(
             "q_id", "q_emb", "q_nrm", "cid",
             F.row_number().over(wq).alias("crk"),
@@ -1059,16 +842,7 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         probes.join(cells, "cid")
         .where(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "np",
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("q_emb"), F.col("embedding"))
-                / (F.col("q_nrm") * F.col("nrm")),
-                6,
-            ).alias("cos"),
-        )
+        .selectExpr("np", "q_id", "vec_id AS neighbor_id", _COS)
         .persist()
     )
     w2 = Window.partitionBy("np", "q_id").orderBy(
@@ -1129,32 +903,16 @@ def dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_lsh) plus |queries|-bounded joins. The truncated pass folds a
     16-element slice — a real 4x less arithmetic, same as at scale."""
     exact = ann_topk(spark, sf_dir).select("q_id", "neighbor_id")
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    ).select(
-        "vec_id",
-        F.slice("embedding", 1, TRUNC_DIMS).alias("temb"),
-    ).select("vec_id", "temb", _norm(F.col("temb")).alias("nrm"))
-    q = emb.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("temb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    ).where(F.col("q_id") % QUERY_MOD == 0)
-    scored = emb.join(broadcast_if_fits(q), F.col("vec_id") != F.col("q_id")).select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            _dot(F.col("q_emb"), F.col("temb"))
-            / (F.col("q_nrm") * F.col("nrm")),
-            6,
-        ).alias("cos"),
+    emb = _rebalanced(
+        spark, sf_dir, "vec_id", f"slice(embedding, 1, {TRUNC_DIMS}) AS temb"
+    ).selectExpr("vec_id", "temb", f"{norm_sql('temb')} AS nrm")
+    q = emb.selectExpr("vec_id AS q_id", "temb AS q_emb", "nrm AS q_nrm").where(
+        f"q_id % {QUERY_MOD} = 0"
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col("neighbor_id"))
-    trunc = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= TOPK)
-        .select("q_id", "neighbor_id")
+    scored = emb.join(broadcast_if_fits(q), F.col("vec_id") != F.col("q_id")).selectExpr(
+        "q_id", "vec_id AS neighbor_id", f"{cos_sql('q_emb', 'temb', 'q_nrm', 'nrm')} AS cos"
     )
+    trunc = top_k_per_query(scored, TOPK).select("q_id", "neighbor_id")
     hits = trunc.join(exact, ["q_id", "neighbor_id"]).groupBy("q_id").agg(
         F.count(F.lit(1)).alias("n_hits")
     )
@@ -1344,64 +1102,30 @@ def ann_candidate_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashed frame so it computes once; bench/driver clear the caches
     # between queries (the dedup._pair_stats discipline). Measured at
     # sf0.1: 13.1 -> ~7 s single-shot.
-    b = _with_bucket(emb).select("vec_id", "bucket").persist()
-    qb = b.select(F.col("vec_id").alias("q_id"), "bucket").where(
-        F.col("q_id") % QUERY_MOD == 0
-    )
-    lsh = (
-        b.join(broadcast_if_fits(qb), "bucket")
-        .where(F.col("vec_id") != F.col("q_id"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
-        .select(F.lit("lsh").alias("method"), "n_candidates")
-    )
+    def _collisions(
+        hashed: DataFrame, keys: list[str], method: str, distinct: bool = False
+    ) -> DataFrame:
+        """The count of (query, corpus) pairs of `hashed` equal on `keys`,
+        each pair counted once if `distinct`."""
+        q = hashed.selectExpr("vec_id AS q_id", *keys).where(f"q_id % {QUERY_MOD} = 0")
+        pairs = hashed.join(broadcast_if_fits(q), keys).where(F.col("vec_id") != F.col("q_id"))
+        if distinct:
+            pairs = pairs.select("q_id", "vec_id").distinct()
+        return pairs.agg(F.count(F.lit(1)).cast("long").alias("n_candidates")).select(
+            F.lit(method).alias("method"), "n_candidates"
+        )
 
-    bucketed = _with_table_buckets(emb).select(
-        "vec_id",
-        F.array(*[F.col(f"bucket_{t}") for t in range(N_TABLES)]).alias("bks"),
+    lsh = _collisions(emb.selectExpr("vec_id", _BUCKET).persist(), ["bucket"], "lsh")
+    multi = _collisions(
+        _table_bucket_rows(emb).persist(), ["t", "bucket"], "lsh_multi", distinct=True
     )
-    tb = F.explode(
-        F.expr(f"transform(sequence(0, {N_TABLES - 1}), t -> struct(t, bks[t] AS b))")
-    )
-    eb = bucketed.select("vec_id", tb.alias("tb")).select(
-        "vec_id", F.col("tb.t").alias("t"), F.col("tb.b").alias("bucket")
-    ).persist()
-    qk = eb.select(F.col("vec_id").alias("q_id"), "t", "bucket").where(
-        F.col("q_id") % QUERY_MOD == 0
-    )
-    multi = (
-        eb.join(broadcast_if_fits(qk), ["t", "bucket"])
-        .where(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id")
-        .distinct()
-        .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
-        .select(F.lit("lsh_multi").alias("method"), "n_candidates")
-    )
-
     cells = _ivf_cells(spark, sf_dir).select("vec_id", "cid").persist()
-    qc = cells.select(F.col("vec_id").alias("q_id"), "cid").where(
-        F.col("q_id") % QUERY_MOD == 0
-    )
-    ivf = (
-        cells.join(broadcast_if_fits(qc), "cid")
-        .where(F.col("vec_id") != F.col("q_id"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
-        .select(F.lit("ivf").alias("method"), "n_candidates")
-    )
-
+    ivf = _collisions(cells, ["cid"], "ivf")
     # lsh_adaptive (r7): same bucket-collision count over the log2(n)-wide
     # code — the row that shows the adaptive width restoring the ~linear
     # volume growth fixed-width LSH loses (SCALING.md r7 dial #6).
-    nbits = adaptive_nbits(emb.count())
-    ab = _with_adaptive_bucket(emb, nbits).select("vec_id", "bucket").persist()
-    qa = ab.select(F.col("vec_id").alias("q_id"), "bucket").where(
-        F.col("q_id") % QUERY_MOD == 0
-    )
-    ada = (
-        ab.join(broadcast_if_fits(qa), "bucket")
-        .where(F.col("vec_id") != F.col("q_id"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
-        .select(F.lit("lsh_adaptive").alias("method"), "n_candidates")
-    )
+    ab = emb.selectExpr("vec_id", _adaptive_bucket(emb.count())).persist()
+    ada = _collisions(ab, ["bucket"], "lsh_adaptive")
     return (
         brute.unionByName(lsh).unionByName(multi).unionByName(ivf).unionByName(ada)
     )
@@ -1432,17 +1156,11 @@ def adaptive_nbits(n: int) -> int:
     return max(1, min(N_PLANES_MAX, math.ceil(math.log2(max(n, 1) / ADAPTIVE_TARGET))))
 
 
-def _with_adaptive_bucket(df: DataFrame, nbits: int) -> DataFrame:
-    """Append the nbits-wide sign-LSH bucket (low `nbits` bits of the
-    N_PLANES_MAX-wide code; only the first `nbits` dot products are ever
-    evaluated — the mask is free)."""
-    bucket = F.lit(0)
-    for p in range(nbits):
-        lit_plane = double_array(ADAPTIVE_PLANES[p])
-        bucket = bucket + F.when(
-            _dot(F.col("embedding"), lit_plane) > 0, F.lit(1 << p)
-        ).otherwise(F.lit(0))
-    return df.withColumn("bucket", bucket)
+def _adaptive_bucket(n: int) -> str:
+    """SQL text for the adaptive_nbits(n)-wide sign-LSH bucket: the low
+    bits of the N_PLANES_MAX-wide code, of which only those dot products
+    are evaluated."""
+    return f"{sign_bucket_sql('embedding', ADAPTIVE_PLANES[:adaptive_nbits(n)])} AS bucket"
 
 
 def ann_lsh_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1463,34 +1181,13 @@ def ann_lsh_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebalanced scan (the fold dot products are CPU-dense per row).
 
     Output adds the chosen `nbits` so the adaptivity itself is graded."""
-    emb0 = load_table(spark, sf_dir, "embeddings")
-    nbits = adaptive_nbits(emb0.count())
-    emb = _with_adaptive_bucket(
-        emb0.repartition(spark.sparkContext.defaultParallelism).select(
-            "vec_id", "embedding"
-        ),
-        nbits,
-    ).select("vec_id", "embedding", "bucket", _norm(F.col("embedding")).alias("nrm"))
-    q = emb.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        "bucket",
-    ).where(F.col("q_id") % QUERY_MOD == 0)
-    pairs = emb.join(broadcast_if_fits(q), "bucket").where(F.col("vec_id") != F.col("q_id"))
-    scored = pairs.select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            _dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")),
-            6,
-        ).alias("cos"),
+    n = load_table(spark, sf_dir, "embeddings").count()
+    emb = _rebalanced(spark, sf_dir, "vec_id", "embedding", _adaptive_bucket(n), _NRM)
+    pairs = emb.join(broadcast_if_fits(_queries(emb, "bucket")), "bucket").where(
+        F.col("vec_id") != F.col("q_id")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= LSH_TOPK)
-        .withColumn("nbits", F.lit(nbits).cast("long"))
+    return top_k_per_query(_scored(pairs), LSH_TOPK).withColumn(
+        "nbits", F.lit(adaptive_nbits(n)).cast("long")
     )
 
 
@@ -1522,14 +1219,8 @@ def ann_bucket_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: three narrow groupBy-count aggs over (vec_id, bucket) frames —
     partial aggs, no payload columns, 3 rows to the driver. skew_x is
     computed as (max*count)/n in one float divide, cross-engine exact."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", "embedding")
-    )
-    nbits = adaptive_nbits(
-        load_table(spark, sf_dir, "embeddings").count()
-    )
+    emb = _rebalanced(spark, sf_dir, "vec_id", "embedding")
+    n = load_table(spark, sf_dir, "embeddings").count()
 
     def _stats(assign: DataFrame, method: str) -> DataFrame:
         occ = assign.groupBy("bucket").agg(F.count(F.lit(1)).alias("occ"))
@@ -1551,10 +1242,8 @@ def ann_bucket_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("skew_x"),
         )
 
-    lsh = _stats(_with_bucket(emb).select("vec_id", "bucket"), "lsh")
-    ada = _stats(
-        _with_adaptive_bucket(emb, nbits).select("vec_id", "bucket"), "lsh_adaptive"
-    )
+    lsh = _stats(emb.selectExpr("vec_id", _BUCKET), "lsh")
+    ada = _stats(emb.selectExpr("vec_id", _adaptive_bucket(n)), "lsh_adaptive")
     ivf = _stats(
         _ivf_cells(spark, sf_dir).select("vec_id", F.col("cid").alias("bucket")),
         "ivf",

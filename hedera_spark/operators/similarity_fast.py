@@ -29,10 +29,10 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hedera_spark.operators.similarity import QUERY_MOD, TOPK
+from hedera_spark.operators.similarity import QUERY_MOD, TOPK, top_k_per_query
 from hedera_spark.sources.tables import load_table
 
 OUT_SCHEMA = "q_id long, neighbor_id long, cos double"
@@ -76,11 +76,8 @@ def ann_topk_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = spread.mapInPandas(score_batches, schema=OUT_SCHEMA).where(
         F.col("neighbor_id") != F.col("q_id")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col("neighbor_id"))
-    return (
-        cands.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= TOPK)
-        .select("q_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rk")
+    return top_k_per_query(cands, TOPK).select(
+        "q_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rk"
     )
 
 

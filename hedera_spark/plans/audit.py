@@ -12,8 +12,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import threading
+import uuid
 
-from pyspark.sql import DataFrame
+from py4j import clientserver
+from pyspark.sql import DataFrame, SparkSession
 
 
 def executed_plan(df: DataFrame) -> str:
@@ -28,6 +31,35 @@ def formatted_plan(df: DataFrame) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def build_cost(spark: SparkSession, build):
+    """(result, round_trips, jobs) of calling `build()`: the driver→JVM
+    round trips sent from the calling thread, and the Spark jobs it
+    fires, counted by the statusTracker under a job group of its own.
+    py4j's finalizer thread sends the deletes of earlier calls' objects
+    whenever it wakes, which is not this call's cost, so other threads
+    are not counted."""
+    sc = spark.sparkContext
+    group = f"build-cost-{uuid.uuid4().hex}"
+    me = threading.get_ident()
+    calls = [0]
+    send = clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += threading.get_ident() == me
+        return send(self, command)
+
+    sc.setJobGroup(group, group)
+    clientserver.ClientServerConnection.send_command = counting
+    try:
+        result = build()
+    finally:
+        clientserver.ClientServerConnection.send_command = send
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, calls[0], len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

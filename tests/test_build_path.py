@@ -10,7 +10,8 @@ pays while its plan is being built, before any action runs.
   stays within its job budget. A cold build stays under a round-trip
   ceiling.
 - dedup_minhash's signature and LSH bands are SQL text too, under a
-  round-trip ceiling of their own.
+  round-trip ceiling of their own, and so are the sign-LSH buckets,
+  dot products and SimHash votes of functions/vectors.py.
 - Everything derived from input files lives in one store keyed by file
   state: a reset drops the trained models and keeps schemas and
   hot-page stats, a path-only state is never stored, and a part file
@@ -23,7 +24,6 @@ from __future__ import annotations
 
 import os
 import struct
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -33,18 +33,10 @@ from tests.conftest import SF_DIR
 
 
 def _jobs_fired(spark, fn) -> int:
-    """Spark jobs `fn` fires, counted by the statusTracker under a job
-    group of its own (after the listener bus has caught up)."""
-    sc = spark.sparkContext
-    group = f"build-path-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    """Spark jobs `fn()` fires."""
+    from hedera_spark.plans.audit import build_cost
+
+    return build_cost(spark, fn)[2]
 
 
 def _write_embeddings(path, with_label: bool) -> None:
@@ -246,60 +238,61 @@ def test_kmeans_trains_on_the_driver_in_one_job(spark):
     assert _jobs_fired(spark, lambda: kmeans_embeddings(spark, SF_DIR)) == 0
 
 
-def test_kmeans_build_round_trip_ceiling(spark, monkeypatch):
-    """Driver→JVM round trips for a cold build. Element-wise `F.lit`
-    centroids cost ~14k; the SQL-text literals about 320 with the Spark
-    loop, and training on the driver about 135. Only the building
-    thread is counted, as for dedup_minhash below."""
-    import threading
+def _build_round_trips(spark, fn) -> int:
+    """Driver→JVM round trips of building `fn` at SF_DIR on the building
+    thread. The build is the second after `reset_session_state`: the
+    first caches the parquet schemas, so the count is the same whatever
+    ran before, and trained models are dropped again before it."""
+    from hedera_spark.plans.audit import build_cost
+    from hedera_spark.session import reset_session_state
 
-    from py4j import clientserver
+    reset_session_state(spark)
+    fn(spark, SF_DIR)
+    reset_session_state(spark)
+    try:
+        return build_cost(spark, lambda: fn(spark, SF_DIR))[1]
+    finally:
+        reset_session_state(spark)
 
+
+def test_kmeans_build_round_trip_ceiling(spark):
+    """Element-wise `F.lit` centroids cost ~14k round trips per build;
+    the SQL-text literals about 320 with the Spark loop, and training on
+    the driver about 135."""
     from hedera_spark.operators.kmeans import kmeans_embeddings
-    from hedera_spark.session import reset_session_state
 
-    reset_session_state(spark)
-    me = threading.get_ident()
-    calls = [0]
-    send = clientserver.ClientServerConnection.send_command
-
-    def counting(self, command):
-        calls[0] += threading.get_ident() == me
-        return send(self, command)
-
-    monkeypatch.setattr(clientserver.ClientServerConnection, "send_command", counting)
-    kmeans_embeddings(spark, SF_DIR)
-    monkeypatch.undo()
-    assert 0 < calls[0] <= 200
+    assert 0 < _build_round_trips(spark, kmeans_embeddings) <= 200
 
 
-def test_dedup_minhash_build_round_trip_ceiling(spark, monkeypatch):
-    """Driver→JVM round trips for a cold dedup_minhash build. Per-hash
-    `F` column chains for the signature cost 776 or more; the SQL-text
-    signature and band kernel about 240. Only the building thread is
-    counted: py4j's finalizer thread sends the deletes of earlier
-    builds' objects whenever it wakes, which is not this build's cost."""
-    import threading
-
-    from py4j import clientserver
-
+def test_dedup_minhash_build_round_trip_ceiling(spark):
+    """Per-hash `F` column chains for the signature cost 776 or more
+    round trips per build; the SQL-text signature and band kernel about
+    240."""
     from hedera_spark.operators.dedup import dedup_minhash
-    from hedera_spark.session import reset_session_state
 
-    reset_session_state(spark)
-    me = threading.get_ident()
-    calls = [0]
-    send = clientserver.ClientServerConnection.send_command
+    assert 0 < _build_round_trips(spark, dedup_minhash) <= 400
 
-    def counting(self, command):
-        calls[0] += threading.get_ident() == me
-        return send(self, command)
 
-    monkeypatch.setattr(clientserver.ClientServerConnection, "send_command", counting)
-    dedup_minhash(spark, SF_DIR)
-    monkeypatch.undo()
-    reset_session_state(spark)
-    assert 0 < calls[0] <= 400
+_VECTOR_CEILINGS = {
+    "ann_lsh": 453,
+    "ann_lsh_multi": 1431,
+    "ann_candidate_volume": 2078,
+    "dedup_embedding_lsh": 432,
+    "dedup_simhash": 938,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_VECTOR_CEILINGS))
+def test_vector_kernel_build_round_trip_ceiling(spark, name):
+    """Each ceiling is half of the entry's build round trips when its
+    sign-LSH buckets, dot products and SimHash vote were `F` column
+    chains (sf0.001): ann_lsh 907, ann_lsh_multi 2,863,
+    ann_candidate_volume 4,156, dedup_embedding_lsh 864, dedup_simhash
+    1,876. As SQL text from functions/vectors.py they take 72, 142, 519,
+    64 and 488."""
+    from hedera_spark.registry import QUERIES
+
+    assert 0 < _build_round_trips(spark, QUERIES[name]) <= _VECTOR_CEILINGS[name]
 
 
 # --- the derived store ------------------------------------------------

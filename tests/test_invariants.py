@@ -300,8 +300,9 @@ def test_ann_lsh_adaptive_candidates_within_bucket(spark):
     corpus-derived value on every output row."""
     from pyspark.sql import functions as F
 
+    from hedera_spark.functions.vectors import sign_bucket_sql
     from hedera_spark.operators.similarity import (
-        _with_adaptive_bucket,
+        ADAPTIVE_PLANES,
         adaptive_nbits,
         ann_lsh_adaptive,
     )
@@ -312,8 +313,8 @@ def test_ann_lsh_adaptive_candidates_within_bucket(spark):
     nbits = adaptive_nbits(emb.count())
     out = ann_lsh_adaptive(spark, SF_DIR)
     assert out.where(F.col("nbits") != nbits).count() == 0
-    bk = _with_adaptive_bucket(emb.select("vec_id", "embedding"), nbits).select(
-        "vec_id", "bucket"
+    bk = emb.selectExpr(
+        "vec_id", f"{sign_bucket_sql('embedding', ADAPTIVE_PLANES[:nbits])} AS bucket"
     )
     joined = (
         out.join(bk.withColumnsRenamed({"vec_id": "q_id", "bucket": "qb"}), "q_id")

@@ -20,6 +20,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from hedera_spark.functions.vectors import l2sq_sql
 from hedera_spark.operators import kmeans as km
 from tests.conftest import SF_DIR
 from tests.test_build_path import _AWKWARD
@@ -180,8 +181,8 @@ def test_unreproducible_rows_train_in_spark(spark, tmp_path, monkeypatch, case):
 
 
 def test_py_dist2_matches_the_sql_distance(spark):
-    """The one driver replica of _DIST2_SQL (used by coreset's pool
-    refinement) gives the column expression's doubles."""
+    """The one driver replica of the rounded l2sq_sql distance (used by
+    coreset's pool refinement) gives the column expression's doubles."""
     rng = random.Random(3)
     pairs = [
         ([rng.uniform(-2, 2) for _ in range(64)], [rng.uniform(-2, 2) for _ in range(64)])
@@ -190,5 +191,6 @@ def test_py_dist2_matches_the_sql_distance(spark):
     df = spark.createDataFrame(
         [(a, {"cemb": b}) for a, b in pairs], "emb array<double>, c struct<cemb: array<double>>"
     )
-    want = [r["d"] for r in df.select(F.expr(km._DIST2_SQL).alias("d")).collect()]
+    dist2 = f"round({l2sq_sql('emb', 'c.cemb')}, 6)"
+    want = [r["d"] for r in df.select(F.expr(dist2).alias("d")).collect()]
     assert [_bits(km._py_dist2(a, b)) for a, b in pairs] == [_bits(w) for w in want]

@@ -356,3 +356,43 @@ def test_derived_state_has_one_store():
         and any("operators" in f"{getattr(n, 'module', None)}.{a.name}" for a in n.names)
     ]
     assert not hits, f"derived state outside sources/tables.derived: {hits}"
+
+
+def _product_folds(src: str) -> list[int]:
+    """Lines where an `aggregate` folds a `zip_with` whose lambda
+    multiplies: a hand-rolled dot product, norm or distance."""
+    import re
+
+    lines = []
+    for m in re.finditer(r"aggregate\(\s*(?:F\.)?zip_with\(", src):
+        depth, end = 1, m.end()
+        while depth and end < len(src):
+            depth += {"(": 1, ")": -1}.get(src[end], 0)
+            end += 1
+        if "*" in src[m.end() : end]:
+            lines.append(src.count("\n", 0, m.start()) + 1)
+    return lines
+
+
+def test_vector_math_and_bit_codes_go_through_the_shared_kernel():
+    """Embedding vector math and bit codes have one owner,
+    hedera_spark/functions/vectors.py: a `zip_with` product fold or a
+    `1 << p` bit-code term anywhere else fails here. registry.py is
+    skipped, because its DuckDB oracles state each algorithm on their
+    own."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "hedera_spark"
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel in ("functions/vectors.py", "registry.py"):
+            continue
+        src = path.read_text()
+        lines = set(_product_folds(src))
+        for i, line in enumerate(src.splitlines(), 1):
+            if re.search(r"\b1 << [a-z_]", line) and re.search(r"(?i)when|then|lit\(", line):
+                lines.add(i)
+        hits += [f"hedera_spark/{rel}:{i}" for i in sorted(lines)]
+    assert not hits, f"hand-rolled vector math or bit code, use functions/vectors.py: {hits}"

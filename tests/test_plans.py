@@ -655,7 +655,9 @@ def test_plan_report_counts_only_the_final_adaptive_plan(spark):
     quality_classifier materializes its persisted per-doc features, whose
     adaptive plan then prints a Final and an Initial section; only the
     Final plan ran, with two shuffles, and the query planned again with
-    its model stored counts the same."""
+    its model stored counts the same. Codegen stage ids restart inside
+    the cached per-doc plan (spans 1-4) and outside it (1-2), so the
+    spans are counted per subplan: six, not four."""
     import importlib.util
     import pathlib
 
@@ -673,3 +675,4 @@ def test_plan_report_counts_only_the_final_adaptive_plan(spark):
     assert "== Initial Plan ==" in cold
     assert report._features(cold) == report._features(stored)
     assert report._features(cold)["exchanges"] == 2
+    assert report._features(cold)["codegen"] == 6
