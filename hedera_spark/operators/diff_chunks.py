@@ -37,15 +37,23 @@ the raw text.
 from __future__ import annotations
 
 import difflib
+import sys
 from collections.abc import Iterator
 
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hedera_spark.sources.tables import load_table
+
+# The mapInPandas kernels below are module-level functions, which
+# cloudpickle would send by reference: a worker that cannot import
+# hedera_spark (a driver script run from outside the checkout) could not
+# load them. By value, they ship with the task.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 CHUNK_SCHEMA = (
     "page_id string, doc_id long, prev_id long, op string, "

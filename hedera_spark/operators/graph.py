@@ -1,22 +1,33 @@
-"""Graph analytics over the anchor co-mention graph — weighted PageRank.
+"""Graph analytics over the anchor co-mention graph: rankings (PageRank,
+HITS), cohesion (triangles, k-core, modularity), communities, distances,
+link prediction and random walks.
 
 Reference parity: Hedera's entity-graph scripts build entity-entity edge
 lists from co-mentions (pig/experimental/entityrelation.pig,
-temporalgraph.pig) precisely so that downstream graph algorithms can rank
-entities; PageRank is the canonical such ranking. The reference leaves the
-iteration to external tooling — here it is a first-class iterative
-DataFrame algorithm, the same persist/unpersist iteration discipline as
-operators/clusters.py (the other fixpoint operator).
+temporalgraph.pig) precisely so that downstream graph algorithms can run
+over them. The reference leaves the algorithms to external tooling; here
+each is a DataFrame plan.
 
-Scale (100 TB): each iteration is one equality join (ranks ⋈ edges on the
-source node) + one partial-aggregated shuffle on the destination node —
-the textbook distributed PageRank data layout. Ranks and edges are
-persisted per iteration and the previous frontier unpersisted, so lineage
-stays O(1) deep regardless of iteration count. Iteration count is FIXED
-(power iteration, not convergence-tested): no driver-side convergence
-collect at all, and a fixed count is what makes the computation exactly
-reproducible cross-engine (the DuckDB oracle unrolls the same five matrix
-products as CTEs).
+Materialize the bounded input, not the result. The co-mention edge list
+is |V|-bounded and tiny next to the corpus, and every algorithm reads it
+several times, so `_edge_list` computes it once (plans/materialize.py)
+and each fixed-depth algorithm (PageRank, HITS, triangles, LPA, BFS,
+two-hop, modularity, walks) is then ONE lazy plan over it: no persist, no
+build-time action, and the unrolled rounds run as stages of the caller's
+own action. Iteration counts are FIXED (not convergence-tested), which is
+what makes each computation exactly reproducible cross-engine: the DuckDB
+oracles unroll the same rounds as CTEs. Without the materialization the
+unrolled plan would hold a copy of the whole `anchor_cooccur` subtree per
+reference, and adaptive execution re-optimizes all of it after every
+stage.
+
+Only the convergence loops (graph_kcore here, clusters.py's connected
+components) need an action per round; they persist each frontier and end
+in `_detach`.
+
+Scale (100 TB): each round is one equality join against the edge list on
+a node key plus one partial-aggregated shuffle bounded by |V| or |E|, the
+textbook distributed layout.
 """
 
 from __future__ import annotations
@@ -24,39 +35,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hedera_spark.operators.anchors import anchor_cooccur
+from hedera_spark.operators.anchors import _doc_tokens, anchor_cooccur
+from hedera_spark.plans.materialize import materialize
+
 
 def _detach(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Materialize `result` off its persisted ancestors, then release
-    them (the r5-VERDICT unpersist-on-materialize item). The iterative
-    operators persist the final frontier because the returned frame's
-    lineage is the whole peel/power chain — unpersisting alone would
-    make the caller's first action recompute the chain from the corpus.
-    localCheckpoint truncates that lineage into the result's OWN blocks
-    (every graph result here is a |V|-bounded aggregate, so the blocks
-    are small), after which the ancestor persists are dead weight:
-    dropping them leaves the session CacheManager EMPTY, so no cached
-    subtree can substitute into later queries' plans (the r4 AQE
-    reuse-killer), and no registry entry relies on reset_session_state
-    for memory hygiene. The checkpoint blocks themselves are
-    ContextCleaner-collected when the returned frame is GC'd.
-
-    Fault tolerance: localCheckpoint blocks live only on executors, so
-    on a real cluster losing an executor AFTER the operator returns
-    would make the result unrecomputable (lineage is truncated). When a
-    reliable checkpoint dir is configured (cluster deploys set one),
-    use checkpoint() — blocks go to the shared filesystem and survive
-    executor loss. localCheckpoint stays the local-mode path, where the
-    executors ARE the driver process and the reliability distinction is
-    moot."""
-    sc = result.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        out = result.checkpoint(eager=True)
-    else:
-        out = result.localCheckpoint(eager=True)
+    """End a convergence loop: materialize `result` off its persisted
+    ancestors, then release them. The loop's returned frame has the whole
+    peel/propagation chain as lineage, so unpersisting alone would make
+    the caller's first action recompute it from the corpus; the
+    materialized result (|V|-bounded, so small) needs none of it, and
+    dropping the persists leaves the session CacheManager empty, so no
+    cached subtree can substitute into a later query's plan. The
+    fixed-depth algorithms have no persists to release and do not call
+    this."""
+    out = materialize(result)
     for c in cached:
         c.unpersist()
     return out
+
+
+def _edge_list(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """anchor_cooccur's (a1, a2, n_docs) edges, computed once and stored:
+    the one materialization of every fixed-depth graph algorithm."""
+    return materialize(anchor_cooccur(spark, sf_dir))
+
+
+def _both_ways(edges: DataFrame, *carried: str) -> DataFrame:
+    """The (a1 < a2) edge list symmetrized: (src, dst, *carried) for each
+    edge in both orientations."""
+    return edges.select(
+        F.col("a1").alias("src"), F.col("a2").alias("dst"), *carried
+    ).union(edges.select(F.col("a2").alias("src"), F.col("a1").alias("dst"), *carried))
 
 
 PR_ITERATIONS = 5
@@ -74,40 +84,18 @@ def pagerank_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations). Every co-mentioned anchor has degree ≥ 1, so there are
     no dangling nodes by construction; rank mass is conserved up to the
     teleport term. Output: (anchor, rank) rounded to 8 decimals."""
-    edges = anchor_cooccur(spark, sf_dir).select(
-        F.col("a1").alias("src"), F.col("a2").alias("dst"), F.col("n_docs")
-    )
-    # persist the symmetrized edges BEFORE deriving out-weights: the
-    # transition table references sym twice (the agg branch and the
-    # join probe), and without the cache each branch would re-run the
-    # whole anchor_cooccur pipeline underneath
-    sym = edges.union(
-        edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "n_docs"
-        )
-    ).persist()
+    sym = _both_ways(_edge_list(spark, sf_dir), "n_docs")
     # per-source normalized transition weight; broadcast-size for the
     # anchor graph, partial-agg bounded by |V| in general
     outw = sym.groupBy("src").agg(F.sum("n_docs").alias("out_w"))
-    trans = (
-        sym.join(outw, "src")
-        .select("src", "dst", (F.col("n_docs") / F.col("out_w")).alias("w"))
-        .persist()
+    trans = sym.join(outw, "src").select(
+        "src", "dst", (F.col("n_docs") / F.col("out_w")).alias("w")
     )
-    nodes = trans.select(F.col("src").alias("anchor")).distinct().persist()
-    n = nodes.count()  # |V|: one scalar to the driver, not data
-    sym.unpersist()  # trans/nodes are materialized; sym is done
-    if n == 0:  # empty graph (empty corpus / no co-mention meets the cut)
-        trans.unpersist()
-        nodes.unpersist()
-        return spark.createDataFrame([], "anchor string, rank double")
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    # Fixed iteration count and each iterate feeds exactly ONE consumer
-    # (the next iterate), so the whole chain stays LAZY — no
-    # per-iteration persist/count jobs; one final materialization runs
-    # the 5 power steps as stages of a single job. (Convergence-checked
-    # loops — dedup_clusters, graph_kcore — still need an action per
-    # round; this one doesn't.)
+    # |V| rides along as a 1-row broadcast column, so no count runs while
+    # the plan is built; an empty graph has no node rows to carry it
+    anchors = sym.select(F.col("src").alias("anchor")).distinct()
+    nodes = anchors.crossJoin(F.broadcast(anchors.agg(F.count(F.lit(1)).alias("n"))))
+    ranks = nodes.select("anchor", (F.lit(1.0) / F.col("n")).alias("rank"))
     for _ in range(PR_ITERATIONS):
         contribs = (
             trans.join(ranks, trans["src"] == ranks["anchor"])
@@ -119,15 +107,11 @@ def pagerank_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "anchor",
             (
-                F.lit(PR_TELEPORT / n)
+                F.lit(PR_TELEPORT) / F.col("n")
                 + PR_DAMPING * F.coalesce(F.col("contrib"), F.lit(0.0))
             ).alias("rank"),
         )
-    # one eager materialization runs the 5 power steps over the cached
-    # trans/nodes, stores the |V|-row result, and releases every persist
-    return _detach(
-        ranks.select("anchor", F.round("rank", 8).alias("rank")), trans, nodes
-    )
+    return ranks.select("anchor", F.round("rank", 8).alias("rank"))
 
 
 def hits_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,15 +136,13 @@ def hits_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
     each half-step is one equality join + one partial-agg shuffle on a
     node key — identical layout to pagerank_anchors, fixed depth 3, no
     driver-side collect (the maxima are 1-row broadcast aggregates)."""
-    from hedera_spark.operators.anchors import _doc_tokens, anchor_cooccur
-
     df_ = (
         _doc_tokens(spark, sf_dir, distinct=True)
         .groupBy("anchor")
         .agg(F.count(F.lit(1)).alias("df"))
     )
     pairs = (
-        anchor_cooccur(spark, sf_dir)
+        _edge_list(spark, sf_dir)
         .join(
             F.broadcast(df_.select(F.col("anchor").alias("a1"), F.col("df").alias("df1"))),
             "a1",
@@ -177,7 +159,7 @@ def hits_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(fwd, F.col("a1")).otherwise(F.col("a2")).alias("src"),
         F.when(fwd, F.col("a2")).otherwise(F.col("a1")).alias("dst"),
         F.col("n_docs").alias("w"),
-    ).persist()
+    )
     auth1 = edges.groupBy("dst").agg(F.sum("w").alias("auth1"))
     hub1 = (
         edges.join(auth1, "dst")
@@ -197,7 +179,7 @@ def hits_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxima = auth2.agg(F.max("auth2").alias("max_a")).crossJoin(
         hub1.agg(F.max("hub1").alias("max_h"))
     )
-    out = (
+    return (
         nodes.join(auth2, nodes["anchor"] == auth2["dst"], "left")
         .join(hub1, nodes["anchor"] == hub1["src"], "left")
         .crossJoin(F.broadcast(maxima))
@@ -211,9 +193,6 @@ def hits_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    # edges is read by all five sub-plans of the result: keep it hot for
-    # the ONE materialization _detach performs, then release it
-    return _detach(out, edges)
 
 
 def anchor_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,8 +206,6 @@ def anchor_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     a normalized association score. Plan: doc-frequency table (partial
     agg, |vocab|), broadcast into the co-occurrence edge list — one
     broadcast join over the bounded anchor universe."""
-    from hedera_spark.operators.anchors import _doc_tokens, anchor_cooccur
-
     toks = _doc_tokens(spark, sf_dir, distinct=True)
     n_docs = toks.select(F.countDistinct("doc_id").alias("n"))
     df_ = toks.groupBy("anchor").agg(F.count(F.lit(1)).alias("df"))
@@ -271,9 +248,7 @@ def anchor_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (anchor, degree, n_triangles, clustering_coeff) for every
     node of the edge list; cc = 0.0 for degree-1 nodes."""
-    from hedera_spark.operators.anchors import anchor_cooccur
-
-    e = anchor_cooccur(spark, sf_dir).select("a1", "a2").persist()
+    e = _edge_list(spark, sf_dir).select("a1", "a2")
     ab = e.select(F.col("a1").alias("a"), F.col("a2").alias("b"))
     bc = e.select(F.col("a1").alias("b"), F.col("a2").alias("c"))
     ac = e.select(F.col("a1").alias("a"), F.col("a2").alias("c"))
@@ -287,7 +262,7 @@ def anchor_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("anchor")
         .agg(F.count(F.lit(1)).alias("degree"))
     )
-    return _detach(
+    return (
         deg.join(tri_nodes, "anchor", "left")
         .select(
             "anchor",
@@ -303,8 +278,7 @@ def anchor_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .otherwise(F.lit(0.0))
             .alias("clustering_coeff"),
-        ),
-        e,
+        )
     )
 
 
@@ -320,8 +294,6 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg shuffles, the first bounded by |V|, the second by
     |distinct degrees| (≪ |V|); the edge list itself is df-capped
     upstream (anchors.py), so no hub blow-up can reach this operator."""
-    from hedera_spark.operators.anchors import anchor_cooccur
-
     e = anchor_cooccur(spark, sf_dir)
     per_node = (
         e.select(F.col("a1").alias("anchor"), "n_docs")
@@ -359,25 +331,17 @@ def graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds as unrolled CTEs (the pagerank discipline).
 
     Scale: per round, one equality join (labels ⋈ edges on dst) + two
-    partial-agg shuffles bounded by |E| votes → |V| labels; frontier
-    persisted and the parent unpersisted per round, lineage O(1)."""
-    edges = anchor_cooccur(spark, sf_dir).select("a1", "a2", "n_docs")
-    sym = edges.union(
-        edges.select(
-            F.col("a2").alias("a1"), F.col("a1").alias("a2"), "n_docs"
-        )
-    ).select(
-        F.col("a1").alias("src"), F.col("a2").alias("dst"), F.col("n_docs").alias("w")
-    ).persist()
-    nodes = sym.select(F.col("src").alias("anchor")).distinct().persist()
-    if nodes.count() == 0:
-        sym.unpersist()
-        nodes.unpersist()
-        return spark.createDataFrame([], "anchor string, community string")
-    labels = nodes.withColumn("label", F.col("anchor"))
-    # fixed round count, each frontier read exactly once by the next
-    # round → keep the chain LAZY and materialize once at the end (the
-    # pagerank_anchors discipline); sym/nodes stay cached across rounds
+    partial-agg shuffles bounded by |E| votes → |V| labels."""
+    return _communities(_edge_list(spark, sf_dir))
+
+
+def _communities(edges: DataFrame) -> DataFrame:
+    """graph_communities' (anchor, community) over an (a1, a2, n_docs)
+    edge list, as one lazy plan."""
+    sym = _both_ways(edges, "n_docs")
+    labels = sym.select(F.col("src").alias("anchor")).distinct().withColumn(
+        "label", F.col("anchor")
+    )
     for _ in range(LPA_ITERATIONS):
         # one exchange per round instead of two: hash(src) satisfies the
         # clustered distribution of BOTH the (src,label) vote sum and the
@@ -391,7 +355,7 @@ def graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
             sym.join(labels, sym["dst"] == labels["anchor"])
             .repartition("src")
             .groupBy(F.col("src"), F.col("label"))
-            .agg(F.sum("w").alias("sum_w"))
+            .agg(F.sum("n_docs").alias("sum_w"))
         )
         labels = (
             votes.groupBy(F.col("src").alias("anchor"))
@@ -402,11 +366,7 @@ def graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("label")
             )
         )
-    # one eager materialization runs the LPA rounds over the cached
-    # sym/nodes, stores the |V|-row result, and releases every persist
-    return _detach(
-        labels.select("anchor", F.col("label").alias("community")), sym, nodes
-    )
+    return labels.select("anchor", F.col("label").alias("community"))
 
 
 KCORE_K = 3
@@ -429,14 +389,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality join in general. Edges persist per round with the previous
     frontier unpersisted (clusters.py's iteration discipline), so
     lineage depth stays O(1) in the round count."""
-    e0 = anchor_cooccur(spark, sf_dir).select(
-        F.col("a1").alias("src"), F.col("a2").alias("dst")
-    )
     # the co-mention edge list is |V|-bounded and tiny next to the corpus:
     # compact it so the peeling rounds don't inherit the corpus scan's
     # task count (same rationale as dedup._shingles' rebalance, inverted)
     edges = (
-        e0.union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        _both_ways(anchor_cooccur(spark, sf_dir))
         .repartition(spark.sparkContext.defaultParallelism)
         .persist()
     )
@@ -489,42 +446,21 @@ def graph_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per round one equality join of the current distance table
     against the edge list (keyed on the source node) + one min partial
-    agg bounded by |V|; the distance frontier persists per round with
-    the previous one unpersisted (O(1) lineage, the pagerank
-    discipline). Seed selection is a TakeOrdered LIMIT over |V| strength
-    rows, never a full sort."""
-    e0 = anchor_cooccur(spark, sf_dir).select(
-        F.col("a1").alias("src"), F.col("a2").alias("dst"), "n_docs"
-    )
-    sym = e0.union(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "n_docs")
-    )
-    edges = (
-        sym.select("src", "dst")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .persist()
-    )
+    agg bounded by |V|. Seed selection is a TakeOrdered LIMIT over |V|
+    strength rows, never a full sort."""
+    sym = _both_ways(_edge_list(spark, sf_dir), "n_docs")
     strength = sym.groupBy("src").agg(F.sum("n_docs").alias("s"))
     dists = (
         strength.orderBy(F.desc("s"), "src")
         .limit(BFS_SEEDS)
         .select(F.col("src").alias("anchor"), F.lit(0).cast("long").alias("dist"))
-        .persist()
     )
     for _ in range(BFS_ROUNDS):
-        cand = dists.join(
-            edges, dists["anchor"] == edges["src"]
-        ).select(F.col("dst").alias("anchor"), (F.col("dist") + 1).alias("dist"))
-        nxt = (
-            dists.union(cand)
-            .groupBy("anchor")
-            .agg(F.min("dist").alias("dist"))
-            .persist()
+        cand = dists.join(sym, dists["anchor"] == sym["src"]).select(
+            F.col("dst").alias("anchor"), (F.col("dist") + 1).alias("dist")
         )
-        nxt.count()  # materialize before releasing the parent frontier
-        dists.unpersist()
-        dists = nxt
-    return _detach(dists, dists, edges)
+        dists = dists.union(cand).groupBy("anchor").agg(F.min("dist").alias("dist"))
+    return dists
 
 
 def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -543,10 +479,10 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     count agg, one semi-filter to existing edges, two |V|-bounded
     degree joins."""
     e = anchor_cooccur(spark, sf_dir).select("a1", "a2")
-    sym = e.union(e.select(F.col("a2").alias("a1"), F.col("a1").alias("a2")))
-    deg = sym.groupBy("a1").agg(F.count(F.lit(1)).alias("deg"))
-    left = sym.select(F.col("a1").alias("a"), F.col("a2").alias("c"))
-    right = sym.select(F.col("a1").alias("b"), F.col("a2").alias("c"))
+    sym = _both_ways(e)
+    deg = sym.groupBy(F.col("src").alias("a1")).agg(F.count(F.lit(1)).alias("deg"))
+    left = sym.select(F.col("src").alias("a"), F.col("dst").alias("c"))
+    right = sym.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     common = (
         left.join(right, "c")
         .where(F.col("a") < F.col("b"))
@@ -594,13 +530,12 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one |V|-bounded degree agg, two broadcast-size degree joins
     onto the edge list, one 1-row moment aggregate."""
-    e = anchor_cooccur(spark, sf_dir).select("a1", "a2")
-    sym = e.union(e.select(F.col("a2").alias("a1"), F.col("a1").alias("a2")))
-    deg = sym.groupBy("a1").agg(F.count(F.lit(1)).alias("deg"))
+    sym = _both_ways(anchor_cooccur(spark, sf_dir))
+    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     pairs = sym.join(
-        deg.select("a1", F.col("deg").alias("x")), "a1"
+        deg.select("src", F.col("deg").alias("x")), "src"
     ).join(
-        deg.select(F.col("a1").alias("a2"), F.col("deg").alias("y")), "a2"
+        deg.select(F.col("src").alias("dst"), F.col("deg").alias("y")), "dst"
     )
     m = pairs.agg(
         F.count(F.lit(1)).alias("n_edges"),
@@ -651,26 +586,23 @@ def graph_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor_cooccur's df-cap and per-doc cuts), existing edges removed
     with one LEFT ANTI join, then a TakeOrdered of 50 rows. No
     Cartesian anywhere; ties break lexicographically."""
-    from hedera_spark.operators.anchors import anchor_cooccur
-
-    e_all = anchor_cooccur(spark, sf_dir).select("a1", "a2", "n_docs")
+    e_all = _edge_list(spark, sf_dir)
     cut = e_all.agg(F.expr("percentile(n_docs, 0.6)").alias("cut"))
     e = (
         e_all.crossJoin(F.broadcast(cut))
         .where(F.col("n_docs") >= F.col("cut"))
         .select("a1", "a2")
-        .persist()
     )
-    sym = e.union(e.select(F.col("a2").alias("a1"), F.col("a1").alias("a2")))
-    x = sym.select(F.col("a1").alias("a"), F.col("a2").alias("v"))
-    y = sym.select(F.col("a1").alias("v"), F.col("a2").alias("c"))
+    sym = _both_ways(e)
+    x = sym.select(F.col("src").alias("a"), F.col("dst").alias("v"))
+    y = sym.select(F.col("src").alias("v"), F.col("dst").alias("c"))
     cand = (
         x.join(y, "v")
         .where(F.col("a") < F.col("c"))
         .groupBy("a", "c")
         .agg(F.count(F.lit(1)).alias("common_neighbors"))
     )
-    out = (
+    return (
         cand.join(
             e,
             (cand["a"] == e["a1"]) & (cand["c"] == e["a2"]),
@@ -684,7 +616,6 @@ def graph_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("common_neighbors"), "a1", "a2")
         .limit(TWO_HOP_TOPK)
     )
-    return _detach(out, e)
 
 
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -700,12 +631,9 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: two keyed joins label the edge endpoints, one community
     aggregate each for internal weight and weighted degree, and the
     1-row total-weight broadcast — all on the df-capped edge list."""
-    from hedera_spark.operators.anchors import anchor_cooccur
-
-    e = anchor_cooccur(spark, sf_dir).select(
-        "a1", "a2", F.col("n_docs").alias("w")
-    ).persist()
-    lab = graph_communities(spark, sf_dir)
+    edges = _edge_list(spark, sf_dir)
+    e = edges.select("a1", "a2", F.col("n_docs").alias("w"))
+    lab = _communities(edges)
     e2 = e.join(
         lab.select(F.col("anchor").alias("a1"), F.col("community").alias("c1")),
         "a1",
@@ -729,7 +657,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c1").alias("community"))
         .agg(F.sum("w").alias("internal_w"))
     )
-    out = (
+    return (
         deg.join(intra, "community", "left")
         .join(F.broadcast(m))
         .select(
@@ -745,7 +673,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("q_term"),
         )
     )
-    return _detach(out, e)
 
 
 WALK_STEPS = 4
@@ -762,20 +689,14 @@ def graph_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop.
 
     Scale: WALK_STEPS fixed joins of the frontier (|V| rows, one walk
-    per node) against the cached symmetrized edge list, each followed
-    by a min_by partial agg — lazily chained and materialized once (the
-    pagerank_anchors discipline). Walk storage is a bounded string; no
-    driver-side stepping.
+    per node) against the symmetrized edge list, each followed by a
+    min_by partial agg, chained as one lazy plan. Walk storage is a
+    bounded string; no driver-side stepping.
 
     Determinism: the md5 pick is a total order (hash, then neighbor);
     every node in the co-mention graph has ≥ 1 neighbor, so no walk
     stalls early."""
-    from hedera_spark.operators.anchors import anchor_cooccur
-
-    e = anchor_cooccur(spark, sf_dir).select("a1", "a2")
-    sym = e.union(
-        e.select(F.col("a2").alias("a1"), F.col("a1").alias("a2"))
-    ).select(F.col("a1").alias("src"), F.col("a2").alias("dst")).persist()
+    sym = _both_ways(_edge_list(spark, sf_dir))
     nodes = sym.select("src").distinct()
     cur = nodes.select(
         F.col("src").alias("start"),
@@ -804,9 +725,8 @@ def graph_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("nxt").alias("cur"),
             )
         )
-    out = cur.select(
+    return cur.select(
         F.col("start").alias("start_anchor"),
         "walk",
         F.lit(WALK_STEPS + 1).cast("long").alias("walk_len"),
     )
-    return _detach(out, sym)

@@ -587,7 +587,8 @@ def sparse_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("w") != 0)
         # four downstream references (norms ×2, query side, corpus side):
         # persist so the bow + idf subtree is computed once, not four
-        # times (hits_anchors' persisted-edges discipline)
+        # times; the weights are corpus-scale, so they are cached lazily
+        # with the query rather than materialized while it is built
         .persist()
     )
     norms = w.groupBy("doc_id").agg(

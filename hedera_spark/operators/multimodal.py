@@ -16,14 +16,22 @@ per-row Python overhead; partitioning is inherited from the scan, so at
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Iterator
 
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hedera_spark.sources.tables import load_table
+
+# The mapInPandas kernels below are module-level functions, which
+# cloudpickle would send by reference: a worker that cannot import
+# hedera_spark (a driver script run from outside the checkout) could not
+# load them. By value, they ship with the task.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 DECODE_SCHEMA = (
     "doc_id long, n_bytes int, width int, height int, n_frames int, format string"

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hedera_spark.operators.profile import EVENT_CHECKSUM_SERIAL
+from hedera_spark.plans.materialize import materialize
 from hedera_spark.plans.range_scan import range_prefix_scan
 from hedera_spark.sources.tables import TABLES, load_table
 
@@ -652,9 +653,11 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("v"),
         )
     )
-    bnds = bounds.groupBy("n_total").agg(
-        F.expr("transform(array_sort(collect_list(struct(k, v))), s -> s.v)").alias("b")
-    ).select("b", "n_total").localCheckpoint(eager=True)
+    bnds = materialize(
+        bounds.groupBy("n_total").agg(
+            F.expr("transform(array_sort(collect_list(struct(k, v))), s -> s.v)").alias("b")
+        ).select("b", "n_total")
+    )
     spine = (
         bnds.where(F.col("n_total") > 0)
         .select(

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hedera_spark.plans.materialize import materialize
 from hedera_spark.sources.tables import load_table
 
 # Count-Min geometry: depth 4 rows × width 256 buckets = 1024 cells.
@@ -655,7 +656,7 @@ def kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize the ≤|types|²-row result, then release the two cached
     # corpus-scale frames — without this the blocks leak for the session
-    out = out.localCheckpoint(eager=True)
+    out = materialize(out)
     bk.unpersist()
     tu.unpersist()
     return out

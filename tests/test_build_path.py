@@ -12,6 +12,9 @@ pays while its plan is being built, before any action runs.
 - dedup_minhash's signature and LSH bands are SQL text too, under a
   round-trip ceiling of their own, and so are the sign-LSH buckets,
   dot products and SimHash votes of functions/vectors.py.
+- The fixed-depth graph algorithms fire only the jobs that materialize
+  their edge list; the graph entries that are lazy over the raw edge
+  list fire none.
 - Everything derived from input files lives in one store keyed by file
   state: a reset drops the trained models and keeps schemas and
   hot-page stats, a path-only state is never stored, and a part file
@@ -238,11 +241,12 @@ def test_kmeans_trains_on_the_driver_in_one_job(spark):
     assert _jobs_fired(spark, lambda: kmeans_embeddings(spark, SF_DIR)) == 0
 
 
-def _build_round_trips(spark, fn) -> int:
-    """Driver→JVM round trips of building `fn` at SF_DIR on the building
-    thread. The build is the second after `reset_session_state`: the
-    first caches the parquet schemas, so the count is the same whatever
-    ran before, and trained models are dropped again before it."""
+def _second_build(spark, fn) -> tuple[int, int]:
+    """(round trips, jobs) of building `fn` at SF_DIR: driver→JVM round
+    trips on the building thread and the Spark jobs fired. The build is
+    the second after `reset_session_state`: the first caches the parquet
+    schemas, so the counts are the same whatever ran before, and trained
+    models are dropped again before it."""
     from hedera_spark.plans.audit import build_cost
     from hedera_spark.session import reset_session_state
 
@@ -250,9 +254,14 @@ def _build_round_trips(spark, fn) -> int:
     fn(spark, SF_DIR)
     reset_session_state(spark)
     try:
-        return build_cost(spark, lambda: fn(spark, SF_DIR))[1]
+        return build_cost(spark, lambda: fn(spark, SF_DIR))[1:]
     finally:
         reset_session_state(spark)
+
+
+def _build_round_trips(spark, fn) -> int:
+    """Driver→JVM round trips of the second build (`_second_build`)."""
+    return _second_build(spark, fn)[0]
 
 
 def test_kmeans_build_round_trip_ceiling(spark):
@@ -293,6 +302,41 @@ def test_vector_kernel_build_round_trip_ceiling(spark, name):
     from hedera_spark.registry import QUERIES
 
     assert 0 < _build_round_trips(spark, QUERIES[name]) <= _VECTOR_CEILINGS[name]
+
+
+# The fixed-depth graph algorithms materialize the co-mention edge list
+# (anchor_cooccur's 8 jobs) and nothing else while they are built.
+_GRAPH_FIXED_DEPTH = [
+    "pagerank_anchors",
+    "hits_anchors",
+    "anchor_triangles",
+    "graph_communities",
+    "graph_two_hop",
+    "graph_modularity",
+    "graph_walks",
+    "graph_distances",
+]
+
+
+@pytest.mark.parametrize("name", _GRAPH_FIXED_DEPTH)
+def test_graph_build_job_ceiling(spark, name):
+    """Persisting and counting intermediates, then checkpointing the
+    result, fired 18 to 44 jobs per build (sf0.001): pagerank_anchors 31,
+    hits_anchors 44, graph_distances 35, graph_modularity 31."""
+    from hedera_spark.registry import QUERIES
+
+    assert 0 < _second_build(spark, QUERIES[name])[1] <= 8
+
+
+@pytest.mark.parametrize(
+    "name", ["graph_degree_stats", "graph_neighbor_jaccard", "graph_assortativity"]
+)
+def test_lazy_graph_entries_fire_no_build_job(spark, name):
+    """These read the raw edge list once each way and stay lazy over it;
+    materializing it (graph._edge_list) would only add jobs."""
+    from hedera_spark.registry import QUERIES
+
+    assert _second_build(spark, QUERIES[name])[1] == 0
 
 
 # --- the derived store ------------------------------------------------

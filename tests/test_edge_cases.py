@@ -765,3 +765,37 @@ def test_runlength_audit_planted_runs(spark, tmp_path):
     assert r["value"]["mean_run_len"] == 1.0
     # user_id constant -> a single run
     assert r["user_id"]["runs_asis"] == 1
+
+
+def test_arrow_kernels_ship_by_value(tmp_path):
+    """A driver script started outside the checkout, with PYTHONPATH
+    unset, puts the checkout on its own sys.path; the Python workers it
+    launches cannot import hedera_spark. The mapInPandas kernels must
+    still run there, so their modules are pickled by value, not by
+    reference."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {str(repo)!r})\n"
+        "from hedera_spark.registry import QUERIES\n"
+        "from hedera_spark.session import get_spark\n"
+        "spark = get_spark('ship-by-value', shuffle_partitions=1)\n"
+        "for name in ('multimodal_meta', 'rev_diff_chunks'):\n"
+        f"    assert QUERIES[name](spark, {SF_DIR!r}).collect(), name\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEMORY="1g")
+    done = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]

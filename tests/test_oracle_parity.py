@@ -13,12 +13,11 @@ from tests.oracle_compare import assert_frames_match
 # Parity cases whose designed cost exceeds ~10 s at sf0.001 (greedy
 # k-center rounds, unrolled iterative-graph/calibration oracle CTEs):
 # marked slow so the default (driver-window) run keeps full-registry
-# parity coverage minus only these six; the round-close certification
+# parity coverage minus only these five; the round-close certification
 # and the driver's own oracle sample still exercise them.
 _HEAVY = {
     "coreset_maxmin",
     "graph_modularity",
-    "graph_distances",
     "calibration_isotonic",
     "ann_pareto",
     "dedup_candidate_volume",

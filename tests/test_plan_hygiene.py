@@ -30,7 +30,7 @@ from tests.conftest import SF_DIR
 # r4 audit: active_users/corpus_select/dedup_semantic/embedding_pca/
 # kmeans_embeddings no longer plan a BNLJ (their 1-row combines now
 # plan as broadcast-hash under AQE); kmv_intersect returns a
-# localCheckpoint scan (its internal grading join is audited by the
+# materialized (checkpoint) scan (its internal grading join is audited by the
 # oracle + unpersist discipline instead). All six removed.
 # (dedup_embedding_lsh graduated: its candidate join is now a plain
 # equality join, so the allowance was removed — r2 verdict item 9.)
@@ -76,15 +76,14 @@ ALLOWED_NESTED_LOOP = {
     "retrieval_agreement",  # composes bm25_topk + ql_topk (their 1-row stats)
     "ks_drift",  # 1-row time-pivot + 1-row totals broadcasts
     "campaign_cooccur",  # 1-row distinct-user-total broadcast
-    "graph_two_hop",  # via _cooccur_tokens (1-row hot stop-token array)
+    "graph_two_hop",  # 1-row percentile-cut broadcast
     "quality_mi",  # 1-row fences + 1-row total broadcasts
     "rare_token_ratio",  # 1-row corpus-size broadcast
-    "graph_modularity",  # 1-row total-weight broadcast + cooccur hot-set
+    "graph_modularity",  # 1-row total-weight broadcast
     "kmeans_silhouette",  # K-row centroid broadcast, like kmeans_embeddings
     "doc_perplexity",  # 1-row vocabulary-size broadcast
     "anchor_cooccur",
     "anchor_cooccur_temporal",
-    "anchor_triangles",  # via _cooccur_tokens (1-row hot stop-token array)
     "graph_degree_stats",  # via _cooccur_tokens (1-row hot stop-token array)
     "chi2_independence",  # margin-frame cross product (|types|x7 grid) + 1-row total
     "benford_audit",  # 9-row digit frame x 1-row total broadcast
@@ -93,8 +92,7 @@ ALLOWED_NESTED_LOOP = {
     "classifier_gains",  # 1-row totals broadcast onto the <=10-row bin frame
     "ams_f2",  # 1-row sketch frame x 1-row exact-F2 broadcast (grading join)
     "bigram_llr",  # 1-row bigram-total broadcast (the bigram_pmi shape)
-    "graph_communities",  # via _cooccur_tokens (1-row hot stop-token array)
-    "pagerank_anchors",
+    "pagerank_anchors",  # 1-row |V| count broadcast
     "anchor_lift",  # 1-row corpus-size aggregate broadcast
     "line_dedup",  # 1-row boilerplate-segment array broadcast
     "dedup_substring",  # 1-row hot-window array broadcast
@@ -119,7 +117,6 @@ ALLOWED_NESTED_LOOP = {
     "zorder_layout_audit",  # 1-row day-span bounds broadcast
     "equi_depth_histogram",  # 1-row boundary-vector broadcast
     "doremi_weights",  # 1-row ref-loss/corpus-total/normalizer broadcasts
-    "graph_walks",  # via _cooccur_tokens (1-row hot stop-token array)
     "pv_stl",  # broadcast calendar span zero-fill (ts_vector discipline)
     "ann_pareto",  # composes the four recall dials (ann_topk baselines)
     "hits_anchors",  # 1-row integer maxima broadcast
@@ -128,8 +125,6 @@ ALLOWED_NESTED_LOOP = {
     "dedup_recall",  # 1-row aggregate combine (pipeline_funnel shape)
     "key_skew_stats",  # 1-row moments × 1-row top-shares combine
     "simhash_recall",  # 1-row aggregate combine (dedup_recall shape)
-    "graph_kcore",  # via _cooccur_tokens (1-row hot stop-token array)
-    "graph_distances",  # via _cooccur_tokens (1-row hot stop-token array)
     "graph_neighbor_jaccard",  # via _cooccur_tokens (same array)
     "rocchio_expansion",  # composes bm25_topk (1-row corpus stats)
     "bigram_pmi",  # 1-row (n_uni, n_bi) totals broadcast
@@ -210,14 +205,17 @@ def test_plan_hygiene(name, spark):
 
 
 # the iterative operators that formerly returned frames whose lineage held
-# a live persist (r5 VERDICT #8): each now ends in graph._detach —
-# localCheckpoint the |V|-bounded result, release every ancestor persist —
-# so materializing the entry leaves the session CacheManager EMPTY and no
-# cached subtree can substitute into a later query's plan (the r4 AQE
-# exchange-reuse killer). The clusters.connected_components compositions
-# (dedup_clusters & co) are detached too, but their upstream
-# dedup_ngram_jaccard keeps its measured kept-rows persist by design, so
-# they are asserted through the jaccard allowance instead.
+# a live persist (r5 VERDICT #8). The fixed-depth ones are now one lazy
+# plan over the materialized co-mention edge list (graph._edge_list) and
+# persist nothing; graph_kcore, a convergence loop, persists per round and
+# ends in graph._detach, which materializes the |V|-bounded result and
+# releases every ancestor persist. Either way collecting the entry leaves
+# the session CacheManager EMPTY, so no cached subtree can substitute into
+# a later query's plan (the r4 AQE exchange-reuse killer). The
+# clusters.connected_components compositions (dedup_clusters & co) are
+# detached too, but their upstream dedup_ngram_jaccard keeps its measured
+# kept-rows persist by design, so they are asserted through the jaccard
+# allowance instead.
 DETACHED_ITERATIVE = [
     "pagerank_anchors",
     "hits_anchors",
@@ -240,6 +238,25 @@ def test_iterative_entries_leave_no_sql_cache(name, spark):
     df.collect()
     jcm = spark._jsparkSession.sharedState().cacheManager()
     assert jcm.isEmpty(), f"{name}: live SQL-cache entries after collect()"
+
+
+def test_checkpoints_go_through_materialize():
+    """Materializing a frame has one owner, hedera_spark/plans/materialize.py,
+    which picks the reliable checkpoint when a checkpoint dir is set and
+    the local one otherwise. A direct `localCheckpoint(` or `.checkpoint(`
+    under operators/ keeps results only on executors even when a reliable
+    dir is configured. (streaming/upsert.py's read-before-overwrite guard
+    is not a cache and keeps its own.)"""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "hedera_spark"
+    hits = [
+        f"hedera_spark/{path.relative_to(root).as_posix()}:{i}"
+        for path in sorted((root / "operators").rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "localCheckpoint(" in line or ".checkpoint(" in line
+    ]
+    assert not hits, f"direct checkpoint, use plans/materialize.py: {hits}"
 
 
 def test_prefix_scans_go_through_the_shared_kernel():
